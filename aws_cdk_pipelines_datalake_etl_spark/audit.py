@@ -5,21 +5,32 @@ The reference keys a DynamoDB item by ``execution_id`` and mutates
 (``state_machine_trigger/lambda_handler.py:25-46``,
 ``etl_job_auditor/lambda_handler.py:50-107``).  A mutable KV store is
 the wrong shape for a data lake, so the engine event-sources it:
-every status change appends one immutable Parquet row; "latest
-status" is a window query.  Appends are tiny and conflict-free at any
-scale; the read path is a standard last-row-per-key window.
+every status change appends one immutable one-row Parquet file;
+"latest status" is a window query over the directory.
+
+An append is a driver-side write with no Spark job, as cheap as the
+reference's one ``put_item``: pyarrow writes the row to a hidden temp
+name (``.part-<uuid>.parquet.tmp``; Spark's file index skips names
+starting with ``.`` or ``_``), fsyncs it, and ``os.replace`` publishes
+it, so a crash or a concurrent reader sees the whole event or none.
+That rename is atomic on a local file system, which is what
+``LakeLayout`` roots are; an object-store root would need a different
+writer (e.g. one conditional PUT per event).
 """
 
 from __future__ import annotations
 
+import os
+import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.window import Window
-
-from pyspark.sql.types import LongType
 
 AUDIT_SCHEMA = StructType(
     [
@@ -34,6 +45,8 @@ AUDIT_SCHEMA = StructType(
         StructField("error_message", StringType(), True),
     ]
 )
+
+_ARROW_SCHEMA = to_arrow_schema(AUDIT_SCHEMA)  # same names, order, nullability
 
 
 class AuditLog:
@@ -50,10 +63,17 @@ class AuditLog:
         # event_seq breaks same-timestamp ties (e.g. an injected frozen
         # clock); real multi-writer ordering still rides the timestamp.
         self._seq += 1
-        df = self.spark.createDataFrame(
-            [Row(event_seq=self._seq, **row)], schema=AUDIT_SCHEMA
+        table = pyarrow.Table.from_pylist(
+            [{"event_seq": self._seq, **row}], schema=_ARROW_SCHEMA
         )
-        df.coalesce(1).write.mode("append").parquet(self.location)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(self.location, f".{name}.tmp")
+        os.makedirs(self.location, exist_ok=True)
+        with open(tmp, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(self.location, name))
 
     def insert_started(
         self,

@@ -21,6 +21,8 @@ Type-normalization rules (SURVEY §1.2):
 
 from __future__ import annotations
 
+from itertools import takewhile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, DecimalType, IntegerType, NullType, StringType
 
@@ -44,16 +46,56 @@ def create_database_if_absent(
     spark.sql(f"CREATE DATABASE IF NOT EXISTS `{database}`{loc}")
 
 
-def _column_ddl(df: DataFrame, include_partition_cols: bool) -> str:
-    cols = []
-    for f in df.schema.fields:
-        if f.name.lower() in PARTITION_COLS:
-            continue
-        cols.append(f"`{f.name}` {normalize_type(f.dataType).simpleString()}")
+def _columns(df: DataFrame, include_partition_cols: bool) -> list[tuple[str, str]]:
+    cols = [
+        (f.name, normalize_type(f.dataType).simpleString())
+        for f in df.schema.fields
+        if f.name.lower() not in PARTITION_COLS
+    ]
     if include_partition_cols:
         # partition keys are always string (etl_raw_to_conformed.py:129-133)
-        cols.extend(f"`{c}` string" for c in PARTITION_COLS)
-    return ", ".join(cols)
+        cols.extend((c, "string") for c in PARTITION_COLS)
+    return cols
+
+
+def _local_path(location: str) -> str:
+    """``location`` as the catalog reports it, minus a ``file:`` scheme."""
+    if location.startswith("file:"):
+        location = "/" + location[len("file:"):].lstrip("/")
+    return location.rstrip("/")
+
+
+def _table_matches(
+    spark: SparkSession,
+    fqn: str,
+    cols: list[tuple[str, str]],
+    partition_cols: tuple[str, ...],
+    location: str,
+) -> bool:
+    """True when table ``fqn`` exists with exactly these columns and
+    types, partition columns and location.
+
+    One ``DESCRIBE TABLE EXTENDED`` answers all three without a Spark
+    job (``Catalog.listColumns`` runs several).  Its rows: every
+    column; for a partitioned table ``# Partition Information``, a
+    header row and the partition columns; a blank row; then the
+    detailed information, ``Location`` among it.
+    """
+    if not spark.catalog.tableExists(fqn):
+        return False
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fqn}").collect()
+    head = list(takewhile(lambda r: r.col_name, rows))
+    have = [
+        (r.col_name, r.data_type)
+        for r in takewhile(lambda r: not r.col_name.startswith("#"), head)
+    ]
+    parts = tuple(r.col_name for r in head[len(have) + 2 :])
+    where = [r.data_type for r in rows if r.col_name == "Location"]
+    return (
+        have == cols
+        and parts == partition_cols
+        and [_local_path(w) for w in where] == [_local_path(location)]
+    )
 
 
 def upsert_table(
@@ -70,16 +112,26 @@ def upsert_table(
     (TableVersion '0', create-or-update at
     etl_raw_to_conformed.py:147-154) — last-writer-wins schema, no
     evolution.  DROP+CREATE of an EXTERNAL (location-backed) table
-    reproduces that exactly without touching data files.
+    reproduces that exactly without touching data files.  When the
+    table already has the same columns, types, partition columns and
+    location, both statements are skipped: the entry would come out
+    identical, and the table never goes missing between them.
+    Callers still run :func:`recover_partitions` after every write; it
+    also refreshes the table's cached file listing.
     """
+    cols = _columns(df, include_partition_cols=partitioned)
+    partition_cols = PARTITION_COLS if partitioned else ()
     create_database_if_absent(spark, database)
-    spark.sql(f"DROP TABLE IF EXISTS `{database}`.`{table}`")
-    cols = _column_ddl(df, include_partition_cols=partitioned)
+    fqn = f"`{database}`.`{table}`"
+    if _table_matches(spark, fqn, cols, partition_cols, location):
+        return
+    spark.sql(f"DROP TABLE IF EXISTS {fqn}")
+    ddl = ", ".join(f"`{name}` {dtype}" for name, dtype in cols)
     partition_clause = (
-        f" PARTITIONED BY ({', '.join(PARTITION_COLS)})" if partitioned else ""
+        f" PARTITIONED BY ({', '.join(partition_cols)})" if partitioned else ""
     )
     spark.sql(
-        f"CREATE TABLE `{database}`.`{table}` ({cols}) USING PARQUET"
+        f"CREATE TABLE {fqn} ({ddl}) USING PARQUET"
         f"{partition_clause} LOCATION '{location}'"
     )
 

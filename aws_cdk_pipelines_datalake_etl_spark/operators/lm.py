@@ -703,8 +703,13 @@ def rho1_token_select(
     # window form's rk <= n_sel set (total order, tie-free).  Winner
     # set, order, and all four outputs are value-identical
     # (tests/test_lm.py proves label-for-label equality; the DuckDB
-    # oracle replays the window form).  Per-doc state is bounded by
-    # doc length — the same bound the window sort buffer had.
+    # oracle replays the window form).  Unlike the window sort, which
+    # spills to disk, each doc's array is built whole in one task's
+    # executor memory and cannot spill.  Budget ~100 B per scored
+    # position (one buffered row object per element, then the array
+    # copy), so a 1M-token doc pins ~100-200 MB of one task's memory:
+    # keep docs under ~1M tokens at default executor memory and split
+    # longer ones upstream.
     item = F.when(
         F.col("excess_micro").isNotNull(),
         F.struct(

@@ -47,3 +47,30 @@ def test_upsert_applies_rules_to_catalog(spark, tmp_path):
     assert dtypes["dbl"] == "double"
     spark.sql("DROP TABLE cat_rules_db.t")
     spark.sql("DROP DATABASE cat_rules_db")
+
+
+def test_upsert_skips_matching_table_and_replaces_on_location_change(
+    spark, tmp_path
+):
+    def props_and_location(fqn: str) -> tuple:
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fqn}").collect()
+        info = {r.col_name: r.data_type for r in rows}
+        return info.get("Table Properties"), info["Location"]
+
+    df = spark.range(3).select(F.col("id"), F.col("id").cast("double").alias("v"))
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    for loc in (old, new):
+        df.write.mode("overwrite").parquet(loc)
+    upsert_table(spark, df, "cat_skip_db", "t", location=old, partitioned=False)
+    spark.sql("ALTER TABLE cat_skip_db.t SET TBLPROPERTIES ('probe' = 'kept')")
+    # same columns, types, partitioning and location: left in place
+    upsert_table(spark, df, "cat_skip_db", "t", location=old, partitioned=False)
+    props, loc = props_and_location("cat_skip_db.t")
+    assert "probe=kept" in props and loc.endswith("/old")
+    # a new location re-creates the entry there
+    upsert_table(spark, df, "cat_skip_db", "t", location=new, partitioned=False)
+    props, loc = props_and_location("cat_skip_db.t")
+    assert props is None and loc.endswith("/new")
+    assert spark.table("cat_skip_db.t").count() == 3
+    spark.sql("DROP TABLE cat_skip_db.t")
+    spark.sql("DROP DATABASE cat_skip_db")

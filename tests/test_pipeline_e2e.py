@@ -89,6 +89,48 @@ def test_rerun_is_idempotent_dynamic_overwrite(spark, runner, yellow_csv):
     assert conformed.count() == 4
 
 
+def test_reingest_unchanged_schema_keeps_table_and_reads_fresh_files(
+    spark, runner, yellow_csv, lake_root
+):
+    """Re-ingesting a day with the same schema leaves both catalog
+    entries in place (no DROP+CREATE window) and overwrites the
+    partition's files; reads through the catalog see only the new
+    files, with no stale listing of the deleted ones."""
+    from tests.conftest import YELLOW_HEADER, YELLOW_ROWS
+
+    tables = (
+        "tlc_taxi_data.yellow_taxi_trip_record",
+        "tlc_taxi_data_purposebuilt.yellow_taxi_trip_record",
+    )
+
+    def identity(fqn: str) -> tuple:
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fqn}").collect()
+        info = {r.col_name: r.data_type for r in rows}
+        return info["Created Time"], info.get("Table Properties")
+
+    assert runner.on_file(yellow_csv).status == "SUCCEEDED"
+    # cache both tables' file listings, and mark them: a re-created
+    # table would lose the property
+    assert [spark.table(t).count() for t in tables] == [4, 3]
+    for t in tables:
+        spark.sql(f"ALTER TABLE {t} SET TBLPROPERTIES ('probe' = 'kept')")
+    before = [identity(t) for t in tables]
+    assert all("probe=kept" in props for _, props in before)
+
+    # same day, same inferred schema, one valid row fewer (vendor 2)
+    key = "tlc_taxi_data/yellow_taxi_trip_record/yellow_tripdata_2020-08-redo.csv"
+    with open(os.path.join(lake_root, "raw", key), "w") as f:
+        f.write("\n".join([YELLOW_HEADER, *YELLOW_ROWS[:3], YELLOW_ROWS[4]]) + "\n")
+    result = runner.on_file(key)
+    assert result.status == "SUCCEEDED", result.error_message
+    assert (result.conformed_rows, result.purposebuilt_rows) == (3, 2)
+
+    assert [identity(t) for t in tables] == before
+    assert [spark.table(t).count() for t in tables] == [3, 2]
+    built = spark.table(tables[1])
+    assert sorted(r.vendorid for r in built.collect()) == [-1, 1]
+
+
 def test_failure_edge_audits_and_notifies(spark, runner, lake_root):
     key = "tlc_taxi_data/missing_table/nope.csv"
     result = runner.on_file(key)
