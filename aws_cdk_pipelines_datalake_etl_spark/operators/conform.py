@@ -225,14 +225,21 @@ def conform(
     n_rows = int(obs.get["n_rows"])
     # catalog upsert after the write so the external location exists
     # (same net state as the reference's upsert-then-write order)
-    catalog.upsert_table(
+    kept = catalog.upsert_table(
         spark,
         df,
         database=params.target_database_name,
         table=params.table_name,
         location=location,
     )
-    catalog.recover_partitions(spark, params.target_database_name, params.table_name)
+    # the write touched only this run's partition: a table left in
+    # place needs only that one registered
+    catalog.recover_partitions(
+        spark,
+        params.target_database_name,
+        params.table_name,
+        params.partition_values if kept else None,
+    )
     table = spark.table(
         f"`{params.target_database_name}`.`{params.table_name}`"
     )

@@ -70,6 +70,8 @@ class RunResult:
     status: str  # SUCCEEDED | FAILED
     error_message: str | None = None
     conformed_rows: int | None = None
+    # rows the purpose-built job wrote this run: the run's partition
+    # only when it ran incrementally (operators/transform.py)
     purposebuilt_rows: int | None = None
 
 
@@ -93,7 +95,11 @@ class PipelineRunner:
     # purpose-built transform: audit FAILED + notify, purpose-built
     # untouched.  The conformed write has already happened — quarantine
     # is by audit status, not rollback; a corrected re-run overwrites
-    # idempotently (K1).
+    # idempotently (K1).  Later runs that write only their own
+    # partition (operators/transform.py) keep the failed partition out
+    # of purpose-built; a later run that recomputes all history (a
+    # first run, an edited SQL, a SQL that mixes partitions) still
+    # picks it up from the conformed zone.
     dq_checks: Callable[[DataFrame], DataFrame] | None = None
     # Schema-drift policy for the conformed zone: "last_writer"
     # (reference semantics, default) or "merge" (opt-in evolution —
@@ -218,6 +224,7 @@ class PipelineRunner:
                 built = transform(
                     self.spark,
                     params,
+                    self.layout.conformed,
                     self.layout.purposebuilt,
                     transforms_dir=self.transforms_dir,
                     target_database=purpose_db,

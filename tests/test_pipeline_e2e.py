@@ -682,3 +682,253 @@ def test_merged_type_matrix():
     ]:
         with pytest.raises(ValueError, match="schema_policy='merge'"):
             _merged_type(old, new, "c")
+
+
+# --- incremental purpose-built transform ---------------------------------
+#
+# A run conforms one ingest-date partition; the purpose-built job then
+# writes only that partition when the table already matches this SQL
+# and the plan proves the partition depends on nothing else.  On the
+# incremental path ``purposebuilt_rows`` counts the run's partition
+# only, which is how these tests tell the two paths apart.
+
+TRANSFORMS_DIR = os.path.join(os.path.dirname(__file__), "..", "transforms")
+YELLOW_KEY = "tlc_taxi_data/yellow_taxi_trip_record/yellow_tripdata.csv"
+YELLOW_PB = "tlc_taxi_data_purposebuilt.yellow_taxi_trip_record"
+
+
+def _day(d: int) -> datetime:
+    return datetime(2020, 8, d, tzinfo=timezone.utc)
+
+
+def _drop(lake_root: str, key: str, header: str, rows: list[str]) -> str:
+    path = os.path.join(lake_root, "raw", key)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "w") as f:
+        f.write("\n".join([header, *rows]) + "\n")
+    return key
+
+
+def _sql(table: str) -> str:
+    with open(os.path.join(TRANSFORMS_DIR, f"{table}.sql")) as f:
+        return f.read()
+
+
+def test_incremental_transform_equals_full_recompute(spark, runner, lake_root):
+    from tests.conftest import YELLOW_HEADER, YELLOW_ROWS
+
+    key = _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, YELLOW_ROWS)
+    runs = [runner.on_file(key, as_of=_day(d)) for d in (1, 2, 3)]
+    assert [r.status for r in runs] == ["SUCCEEDED"] * 3
+    # the first run builds the table; the next two write only their
+    # own day's 3 groups (a full recompute would write 6, then 9)
+    assert [r.purposebuilt_rows for r in runs] == [3, 3, 3]
+
+    # backfill day 1 with different rows: a new vendor, a changed fare
+    # (every drop keeps the malformed row, which keeps the inferred
+    # schema the same)
+    changed = YELLOW_ROWS[1].replace("1,", "2,", 1).replace(",20.0,", ",99.0,")
+    _drop(
+        lake_root, YELLOW_KEY, YELLOW_HEADER,
+        [YELLOW_ROWS[0], changed, YELLOW_ROWS[2], YELLOW_ROWS[4]],
+    )
+    res = runner.backfill(key, as_of=_day(1))
+    assert (res.status, res.purposebuilt_rows) == ("SUCCEEDED", 3)
+    # re-ingest day 3 with fewer rows: one group left
+    _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, [*YELLOW_ROWS[:2], YELLOW_ROWS[4]])
+    res = runner.on_file(key, as_of=_day(3))
+    assert (res.status, res.purposebuilt_rows) == ("SUCCEEDED", 1)
+
+    built = spark.table(YELLOW_PB)
+    full = spark.sql(_sql("yellow_taxi_trip_record")).select(*built.columns)
+    assert built.count() == full.count() == 3 + 3 + 1
+    assert built.exceptAll(full).count() == 0
+    assert full.exceptAll(built).count() == 0
+    day1 = built.filter("day = '01'").collect()
+    assert (2, 99.0) in {(r.vendorid, r.total_fare_amount) for r in day1}
+
+
+def test_incremental_plan_scans_only_the_run_partition(
+    spark, runner, yellow_csv, lake_root
+):
+    """The filtered yellow SQL's only scan carries the run's three
+    partition equalities and reads the conformed table's location; a
+    SQL whose scans carry them only because a constant or another
+    partition column happens to equal the run's value is refused."""
+    import re
+
+    from aws_cdk_pipelines_datalake_etl_spark.operators.transform import (
+        _partition_slice,
+        _where_partition,
+    )
+    from aws_cdk_pipelines_datalake_etl_spark.plans.explain import formatted_plan
+
+    def partition_filters(df) -> list[str]:
+        lines = formatted_plan(df).splitlines()
+        return [ln for ln in lines if ln.startswith("PartitionFilters:")]
+
+    assert runner.on_file(yellow_csv).status == "SUCCEEDED"  # 2020-08-15
+    run = ("2020", "08", "15")
+    sql = spark.sql(_sql("yellow_taxi_trip_record"))
+    filters = partition_filters(_where_partition(sql, run))
+    assert len(filters) == 1, filters
+    for col, value in zip(("year", "month", "day"), run):
+        assert re.search(rf"\({col}#\d+ = {value}\)", filters[0]), filters[0]
+
+    conformed = os.path.join(lake_root, "conformed", "yellow_taxi_trip_record")
+    assert _partition_slice(sql, conformed, run) is not None
+    # a day the table does not have: the scan finds no files to place
+    assert _partition_slice(sql, conformed, ("2020", "08", "16")) is None
+    # locations are compared exactly: the conformed root is not the table
+    assert _partition_slice(sql, os.path.dirname(conformed), run) is None
+
+    # a self-join pinned to day 15 lets every output day read input
+    # day 15: for the run's day both scans carry day 15, yet the check
+    # fails, because for a day no constant names one scan does not
+    pinned = spark.sql(
+        "SELECT a.year, a.month, a.day, COUNT(*) AS n "
+        "FROM tlc_taxi_data.yellow_taxi_trip_record a "
+        "JOIN tlc_taxi_data.yellow_taxi_trip_record b "
+        "ON a.year = b.year AND a.month = b.month AND b.day = '15' "
+        "GROUP BY a.year, a.month, a.day"
+    )
+    filters = partition_filters(_where_partition(pinned, run))
+    assert len(filters) == 2 and all("= 15)" in f for f in filters), filters
+    assert _partition_slice(pinned, conformed, run) is None
+    # the same when b.day follows a.month: on 2020-08-08 both scans
+    # carry day 08, yet every August day reads input day 08
+    assert runner.on_file(yellow_csv, as_of=_day(8)).status == "SUCCEEDED"
+    crossed = spark.sql(
+        "SELECT a.year, a.month, a.day, COUNT(*) AS n "
+        "FROM tlc_taxi_data.yellow_taxi_trip_record a "
+        "JOIN tlc_taxi_data.yellow_taxi_trip_record b "
+        "ON a.year = b.year AND a.month = b.month AND b.day = a.month "
+        "GROUP BY a.year, a.month, a.day"
+    )
+    eighth = ("2020", "08", "08")
+    filters = partition_filters(_where_partition(crossed, eighth))
+    assert len(filters) == 2 and all("= 08)" in f for f in filters), filters
+    assert _partition_slice(crossed, conformed, eighth) is None
+
+
+def test_window_transform_recomputes_all_days_on_backfill(spark, runner, lake_root):
+    """transforms/user_events.sql runs a window over user_id across
+    days: a backfilled earlier event changes the next day's running
+    total, so the job must recompute every partition."""
+    from aws_cdk_pipelines_datalake_etl_spark.operators.transform import (
+        _partition_slice,
+    )
+
+    key, header = "app_events/user_events/events.csv", "event_id,user_id,amount"
+    _drop(lake_root, key, header, ["1,7,10.0", "2,7,5.0"])
+    assert runner.on_file(key, as_of=_day(1)).status == "SUCCEEDED"
+    _drop(lake_root, key, header, ["3,7,1.0"])
+    assert runner.on_file(key, as_of=_day(2)).status == "SUCCEEDED"
+
+    def running() -> dict:
+        return {
+            r.event_id: r.running_amount
+            for r in spark.table("app_events_purposebuilt.user_events").collect()
+        }
+
+    assert running() == {1: 10.0, 2: 15.0, 3: 16.0}
+    _drop(lake_root, key, header, ["0,7,100.0", "1,7,10.0", "2,7,5.0"])
+    res = runner.backfill(key, as_of=_day(1))
+    assert (res.status, res.purposebuilt_rows) == ("SUCCEEDED", 4)
+    assert running() == {0: 100.0, 1: 110.0, 2: 115.0, 3: 116.0}
+
+    # the day filter stays above the window, so no scan carries it
+    conformed = os.path.join(lake_root, "conformed", "user_events")
+    sql = spark.sql(_sql("user_events"))
+    assert _partition_slice(sql, conformed, ("2020", "08", "02")) is None
+
+
+def test_green_cross_table_transform_recomputes_all_days(spark, runner, lake_root):
+    """The green SQL reads green_taxi_record_data, not the table the
+    trigger file conformed, so a later trigger must still see a
+    re-conformed earlier day of the data table."""
+    data = "tlc_taxi_data/green_taxi_record_data/green.csv"
+    trigger = "tlc_taxi_data/green_taxi_trip_record/green.csv"
+    _drop(lake_root, data, GREEN_HEADER, GREEN_ROWS)
+    _drop(lake_root, trigger, GREEN_HEADER, GREEN_ROWS)
+    assert runner.on_file(data, as_of=_day(1)).status == "SUCCEEDED"
+    assert runner.on_file(trigger, as_of=_day(1)).status == "SUCCEEDED"
+
+    _drop(lake_root, data, GREEN_HEADER, GREEN_ROWS[2:])
+    assert runner.on_file(data, as_of=_day(1)).status == "SUCCEEDED"
+    res = runner.on_file(trigger, as_of=_day(2))
+    assert (res.status, res.purposebuilt_rows) == ("SUCCEEDED", 1)
+    pb = spark.table("tlc_taxi_data_purposebuilt.green_taxi_trip_record")
+    rows = {
+        (r.day, r.vendorid, r.pulocationid): (r["count"], round(r.total_amount, 6))
+        for r in pb.collect()
+    }
+    assert rows == {("01", 1, 11): (1, 5.3)}
+
+
+def test_edited_transform_sql_rebuilds_history(spark, lake_root, tmp_path):
+    """Editing the .sql file (same output schema) changes the table's
+    SQL hash, so the next run recomputes every day with the new SQL;
+    a rebuild that fails leaves the next run rebuilding too."""
+    from tests.conftest import YELLOW_HEADER, YELLOW_ROWS
+
+    transforms = tmp_path / "transforms"
+    transforms.mkdir()
+    sql_file = transforms / "yellow_taxi_trip_record.sql"
+    sql = _sql("yellow_taxi_trip_record")
+    sql_file.write_text(sql)
+    r = PipelineRunner(
+        spark=spark,
+        layout=LakeLayout(lake_root),
+        transforms_dir=str(transforms),
+        notifier=lambda s, m: None,
+    )
+    key = _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, YELLOW_ROWS)
+    assert [r.on_file(key, as_of=_day(d)).purposebuilt_rows for d in (1, 2)] == [3, 3]
+
+    source = "FROM tlc_taxi_data.yellow_taxi_trip_record"
+    edited = sql.replace(
+        "COUNT(*)                   AS count", "COUNT(*) + 100 AS count"
+    ).replace(source, f"{source} WHERE assert_true(fare_amount < 1000) IS NULL")
+    assert edited.count("+ 100") == 1 and edited.count("assert_true") == 1
+    sql_file.write_text(edited)
+    far = YELLOW_ROWS[0].replace(",10.0,", ",5000.0,")
+    _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, [far, *YELLOW_ROWS[1:]])
+    assert r.on_file(key, as_of=_day(3)).status == "FAILED"
+
+    _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, YELLOW_ROWS)
+    res = r.on_file(key, as_of=_day(3))
+    assert (res.status, res.purposebuilt_rows) == ("SUCCEEDED", 9)
+    counts = {(row.day, row["count"]) for row in spark.table(YELLOW_PB).collect()}
+    assert {d for d, _ in counts} == {"01", "02", "03"}
+    assert all(c > 100 for _, c in counts)
+
+
+def test_dq_gate_quarantine_holds_across_incremental_runs(spark, lake_root):
+    """A day that failed the data-quality gate stays out of the
+    purpose-built table when a later day passes: the later run writes
+    only its own partition."""
+    from tests.conftest import YELLOW_HEADER, YELLOW_ROWS
+
+    from aws_cdk_pipelines_datalake_etl_spark.operators.quality import (
+        completeness_and_bounds_report,
+    )
+
+    r = PipelineRunner(
+        spark=spark,
+        layout=LakeLayout(lake_root),
+        transforms_dir=TRANSFORMS_DIR,
+        notifier=lambda s, m: None,
+    )
+    key = _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, YELLOW_ROWS)
+    assert r.on_file(key, as_of=_day(1)).status == "SUCCEEDED"
+    # trip_distance must lie in [-2, -1]: guaranteed failure
+    r.dq_checks = lambda df: completeness_and_bounds_report(
+        df, completeness_cols=[], bounds={"trip_distance": (-2.0, -1.0)}
+    )
+    assert r.on_file(key, as_of=_day(2)).status == "FAILED"
+    r.dq_checks = None
+    assert r.on_file(key, as_of=_day(3)).status == "SUCCEEDED"
+
+    days = spark.table(YELLOW_PB).select("day").distinct().collect()
+    assert {row.day for row in days} == {"01", "03"}
