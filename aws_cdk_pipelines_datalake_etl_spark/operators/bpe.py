@@ -369,7 +369,6 @@ def bpe_encode_ids(
     vocab: dict[str, int],
     id_col: str = "doc_id",
     text_col: str = "text",
-    repartition: int | None = None,
 ) -> DataFrame:
     """Row-local BPE encoding to TOKEN-ID SEQUENCES — the terminal
     tokenizer artifact a pretraining pipeline feeds to sequence
@@ -380,18 +379,14 @@ def bpe_encode_ids(
     was built from the same corpus, possible on held-out text with
     unseen characters — map to :data:`UNK` id 0 and are tallied in
     ``n_unk``) and ``n_tokens``.  Same broadcast merge table and
-    Arrow-batched UDF as :func:`bpe_encode`; by default zero shuffle —
-    output inherits input partitioning.
+    Arrow-batched UDF as :func:`bpe_encode`.
 
-    ``repartition``: the encode is the expensive per-row step of the
-    pipeline, so when the input arrives as a few big files (fewer
-    splits than cores), pass a target partition count to buy full
-    parallelism with one round-robin shuffle — the standard trade
-    before expensive per-row work.  Measured at sf1 (450k docs in a
-    2-split parquet on local[32]): the zero-shuffle form runs 2-wide;
-    ``repartition=32`` runs 32-wide (SCALE.md round-8 table)."""
-    if repartition:
-        df = df.repartition(repartition)
+    The input is repartitioned to the session's default parallelism
+    first: the encode is the pipeline's expensive per-row step, and
+    one round-robin shuffle lets a few-big-files input use every core
+    (sf1, 2-split parquet on local[32]: 2-wide without it, SCALE.md
+    round-8 table)."""
+    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,

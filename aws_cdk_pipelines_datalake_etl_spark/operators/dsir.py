@@ -160,7 +160,6 @@ def dsir_feature_counts(
     id_col: str = "doc_id",
     text_col: str = "text",
     dim: int = 4096,
-    repartition: int | None = None,
 ) -> DataFrame:
     """The STAGEABLE per-(doc, slot) feature table
     ``(_id, _tgt, slot, k)`` — the one expensive artifact in the DSIR
@@ -169,16 +168,14 @@ def dsir_feature_counts(
 
     This is the 100 TB staging seam (VERDICT r9 #2): materialize this
     table to parquet once, then pass it to ``dsir_weights(feats=...)``
-    so neither consumer re-runs the fan-out.  At bench scale,
-    ``dsir_weights(stage=True)`` does the equivalent in-session via an
-    eager ``localCheckpoint``."""
+    so neither consumer re-runs the fan-out.  Without ``feats=``,
+    :func:`dsir_weights` does the equivalent in-session via an eager
+    ``localCheckpoint``."""
     base = df.select(
         F.col(id_col).alias("_id"),
         target_expr.cast("boolean").alias("_tgt"),
         F.col(text_col).alias("_text"),
     )
-    if repartition is not None:
-        base = base.repartition(repartition)
     return _hashed_gram_counts(base, "_id", "_text", "_tgt", dim)
 
 
@@ -269,10 +266,8 @@ def dsir_weights(
     id_col: str = "doc_id",
     text_col: str = "text",
     dim: int = 4096,
-    repartition: int | None = None,
     counts: DataFrame | None = None,
     feats: DataFrame | None = None,
-    stage: bool = False,
 ) -> DataFrame:
     """Importance log-weights for every document.
 
@@ -284,33 +279,21 @@ def dsir_weights(
     weight_micro bigint)`` — ``weight_micro`` is the integer micro-nat
     log importance ratio; zero-token docs carry weight 0.
 
-    ``repartition`` widens the scan before the ~2x-tokens explode
-    (the single-file-parquet dial, same as ``bpe_encode_ids`` /
-    ``language_id_nb``).
-
-    The feature table is consumed twice (model agg, then scoring); the
-    staging seam (VERDICT r9 #2) controls whether it is computed once:
-
-    * ``feats=`` — a pre-staged :func:`dsir_feature_counts` table
-      (parquet at 100 TB, a persisted frame in a notebook); both
-      consumers read it, the fan-out never runs here.
-    * ``stage=True`` — in-session staging: the feature table is
-      materialized ONCE via an eager ``localCheckpoint`` (executor
-      block store, MEMORY_AND_DISK) and both consumers read the
-      checkpoint.  Chosen over ``persist()`` because a persisted
-      plan is cached by canonicalized-plan key and would be shared
-      across repeated identical calls — bench/probe re-runs would
-      time a cache hit, not the operator.
-    * default (both off) — the original recompute-twice form, one
-      extra scan at small scale."""
+    The feature table is consumed twice (model agg, then scoring), so
+    it is computed once (VERDICT r9 #2): either passed in as ``feats=``
+    (a pre-staged :func:`dsir_feature_counts` table — parquet at
+    100 TB; the fan-out never runs here), or staged in-session with an
+    eager ``localCheckpoint``.  ``localCheckpoint`` rather than
+    ``persist()``: a persisted plan is shared across repeated
+    identical calls, so bench re-runs would time a cache hit.  With
+    ``counts=`` the model side never scans the features, so they are
+    not staged."""
     spark = df.sparkSession
     base = df.select(
         F.col(id_col).alias("_id"),
         target_expr.cast("boolean").alias("_tgt"),
         F.col(text_col).alias("_text"),
     )
-    if repartition is not None:
-        base = base.repartition(repartition)
 
     internal_feats = feats is None
     if feats is None:
@@ -320,9 +303,7 @@ def dsir_weights(
         feats = _hashed_gram_counts(
             base, "_id", "_text", "_tgt", dim, keep_empty=True
         )
-        if stage and counts is None:
-            # counts= means the model side never scans feats, so there
-            # is only one consumer and staging would just add a copy.
+        if counts is None:
             feats = feats.localCheckpoint(eager=True)
     if counts is None:
         model_feats = (

@@ -449,7 +449,6 @@ def language_id_nb(
     text_col: str = "text",
     samples: dict[str, str] | None = None,
     min_margin_micro: int = 0,
-    repartition: int | None = None,
 ) -> DataFrame:
     """Per-document language via the char-trigram NB model.
 
@@ -467,11 +466,10 @@ def language_id_nb(
     (default) disables the band; ~1000-3000 labels genuine near-ties
     (e.g. short es-vs-pt fragments) ``'und'`` instead of guessing.
 
-    ``repartition`` widens the documents scan BEFORE the trigram
-    explode — apply when the input has fewer splits than cores (the
-    single-file-parquet ceiling: the explode multiplies rows ~300x, so
-    a 2-split input caps the whole job at 2 tasks; same dial as
-    ``bpe.bpe_encode_ids``).
+    The documents scan is repartitioned to the session's default
+    parallelism BEFORE the trigram explode: the explode multiplies
+    rows ~300x, so a 2-split single-file-parquet input would cap the
+    whole job at 2 tasks.
 
     Plan (round 9, one doc-proportional exchange — was three; round
     10, 1:1 model join — was one row per MATCHING LANGUAGE): trigram
@@ -499,9 +497,9 @@ def language_id_nb(
         "tri string, sc array<bigint>",
     )
 
-    base = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
-    if repartition is not None:
-        base = base.repartition(repartition)
+    base = df.select(
+        F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
+    ).repartition(spark.sparkContext.defaultParallelism)
     docs = base.select("_id", _norm(F.col("_t")).alias("_n")).select(
         "_id",
         "_n",
@@ -588,7 +586,6 @@ def dominant_script(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    repartition: int | None = None,
 ) -> DataFrame:
     """Per-document dominant Unicode script — the script-level
     dimension VERDICT r9 #3 asked for: text whose language the NB
@@ -608,12 +605,10 @@ def dominant_script(
     DuckDB oracle mirrors each count with the identical literal-range
     regex and a ``list_sort`` over the same structs.
 
-    ``repartition`` widens a few-splits input BEFORE the 7 regex
-    passes (the single-file-parquet ceiling — this operator is pure
-    per-row CPU, so a 2-split sf1 input caps it at 2 of 32 cores;
-    same dial as ``language_id_nb``)."""
-    if repartition is not None:
-        df = df.repartition(repartition)
+    The input is repartitioned to the session's default parallelism
+    before the 7 regex passes: the operator is pure per-row CPU, so a
+    2-split sf1 input would run on 2 of 32 cores."""
+    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     low = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     names = sorted(SCRIPT_RANGES)
     # count = length - length(text with the script's runs REMOVED):

@@ -74,25 +74,13 @@ def train_bigram_lm(
     One persisted-model deployment writes the first two bucketed by
     their join keys; here they stay DataFrames.
 
-    ``stage=True`` materializes the two count tables ONCE (eager
-    ``localCheckpoint``, the repo's staging device) so every
-    downstream consumer — scorers join ``unigrams`` twice and derived
-    tables (``totals``, KN's ``ctx``/``cont``) re-aggregate them —
-    reads the vocabulary-bounded staged table instead of re-running
-    the corpus explode+agg.
-
-    Whether that pays was MEASURED, not assumed (r12): AQE's runtime
-    exchange reuse already dedupes duplicated agg subtrees when their
-    scans prune to the SAME columns — the stupid-backoff scorers'
-    final adaptive plans show 4-6 ``ReusedExchange`` nodes and staging
-    them is pure overhead (~15% slower at sf0.1 AND sf1, 8 and 32
-    cores, interleaved A/B) — so those default ``stage=False``.
-    Kneser-Ney's derived tables prune the bigram scan differently per
-    consumer (ctx wants (w1,c2), cont wants (w2), the join wants
-    (w1,w2,c2)), the subtrees stop being canonically equal, and its
-    final plan has ZERO reuse: there staging wins 2.5x at sf1 and
-    :func:`kneser_ney_logprob` defaults it on.  Values are identical
-    either way; only lineage is truncated.
+    ``stage=True`` materializes the two count tables once (eager
+    ``localCheckpoint``).  The Kneser-Ney and rho1 callers stage:
+    their consumers prune the count subtrees to different columns, so
+    AQE reuses no exchange and the corpus explode+agg would re-run per
+    consumer (r12/r13).  The stupid-backoff scorers do not: AQE
+    already reuses their identically-pruned subtrees, and staging
+    measured ~15% slower (r12).
     """
     uni = df.select(F.explode(tokens(text_col)).alias("w"))
     unigrams = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c1"))
@@ -116,7 +104,6 @@ def bigram_logprob(
     score: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stage: bool = False,
 ) -> DataFrame:
     """Mean bigram log-probability of each ``score`` document under
     the model trained on ``train`` (stupid backoff, see module doc).
@@ -131,7 +118,7 @@ def bigram_logprob(
     doc, aggregated conditionally), NOT a distinct+left-join back,
     so keeping the short docs costs zero extra shuffles (ADVICE r6).
     """
-    bigrams, unigrams, totals = train_bigram_lm(train, text_col, stage=stage)
+    bigrams, unigrams, totals = train_bigram_lm(train, text_col)
 
     stream = score.select(
         F.col(id_col).alias("id"),
@@ -191,7 +178,6 @@ def perplexity_buckets(
     n_buckets: int = 3,
     method: str = "ntile",
     boundary_mode: str = "exact",
-    stage: bool = True,
 ) -> DataFrame:
     """CCNet-style perplexity terciles: rank docs by model score
     (best = highest mean log-probability = lowest perplexity) and
@@ -247,12 +233,10 @@ def perplexity_buckets(
     if boundary_mode not in ("exact", "approx"):
         raise ValueError(f"unknown boundary_mode {boundary_mode!r}")
     # The cutpoints form consumes ``scored`` twice (boundary agg +
-    # label join); when ``scored`` is itself an expensive scoring
-    # pipeline, stage it once (eager localCheckpoint — values
-    # identical, lineage truncated) instead of evaluating the whole
-    # upstream twice.  The ntile branch consumes it once: no staging.
-    if stage:
-        scored = scored.localCheckpoint(eager=True)
+    # label join), so it is staged once rather than evaluating the
+    # upstream scoring pipeline twice.  The ntile branch consumes it
+    # once: no staging.
+    scored = scored.localCheckpoint(eager=True)
     qs = ", ".join(str(i / n_buckets) for i in range(1, n_buckets))
     fn = "percentile" if boundary_mode == "exact" else "approx_percentile"
     extra = "" if boundary_mode == "exact" else ", 10000"
@@ -286,7 +270,7 @@ KN_DISCOUNT = 0.75
 
 
 def train_kneser_ney_lm(
-    df: DataFrame, text_col: str = "text", stage: bool = False
+    df: DataFrame, text_col: str = "text"
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Count tables of the interpolated Kneser-Ney bigram LM (Kneser &
     Ney 1995; the interpolated form of Chen & Goodman 1999):
@@ -302,15 +286,12 @@ def train_kneser_ney_lm(
     - ``totals``: one row (n_bigram_types, v_vocab).
 
     ``ctx`` and ``cont`` both derive from the bigram table (two cheap
-    aggs of an already-aggregated, vocabulary-bounded input).  With
-    ``stage=True`` the bigram/unigram tables are materialized once so
-    those derivations (and the scorer's joins) really do cost two
-    cheap aggs.  Unstaged, each consumer prunes the bigram subtree to
-    different columns, the subtrees stop being canonically equal, AQE
-    reuses NOTHING (measured r12: 0 ReusedExchange in the final
-    adaptive plan vs 6 in the stupid-backoff twin), and the corpus
-    explode+agg re-runs per consumer — staging won 2.5x at sf1."""
-    bigrams, unigrams, _ = train_bigram_lm(df, text_col, stage=stage)
+    aggs of an already-aggregated, vocabulary-bounded input).  The
+    bigram/unigram tables are staged: each consumer prunes them to
+    different columns, so AQE reuses no exchange and unstaged the
+    corpus explode+agg re-ran per consumer (r12: staging won 2.5x at
+    sf1)."""
+    bigrams, unigrams, _ = train_bigram_lm(df, text_col, stage=True)
     ctx = bigrams.groupBy("w1").agg(
         F.sum("c2").alias("ctx_total"),
         F.count(F.lit(1)).alias("n1p_fwd"),
@@ -327,7 +308,6 @@ def kneser_ney_logprob(
     score: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stage: bool = True,
 ) -> DataFrame:
     """Mean interpolated-Kneser-Ney bigram log-probability of each
     ``score`` document under the model trained on ``train``:
@@ -359,9 +339,7 @@ def kneser_ney_logprob(
     Scale posture: identical to ``bigram_logprob`` — model tables are
     vocabulary-bounded join sides (AQE broadcasts while they fit),
     the scored stream explodes row-locally and aggregates once."""
-    bigrams, ctx, cont, totals = train_kneser_ney_lm(
-        train, text_col, stage=stage
-    )
+    bigrams, ctx, cont, totals = train_kneser_ney_lm(train, text_col)
 
     stream = score.select(
         F.col(id_col).alias("id"),
@@ -448,16 +426,11 @@ def train_trigram_lm(
     """Count tables of the trigram stupid-backoff LM:
     ``(trigrams, bigrams, unigrams, totals)`` — the bigram tables are
     :func:`train_bigram_lm`'s (the corpus is exploded once more for
-    the trigram level only).  ``stage=True`` materializes all three
-    count tables once (see :func:`train_bigram_lm`): the trigram
-    scorer joins ``bigrams`` and ``unigrams`` twice each.  The STATIC
-    plan shows 14 corpus scans unstaged, but AQE's runtime exchange
-    reuse collapses the duplicates (6 ReusedExchange in the final
-    adaptive plan) — see :func:`train_bigram_lm` for the measurements
-    that make ``stage=False`` the scorer default here.  The trigram
-    table itself has exactly ONE consumer, so it is never
-    checkpointed — staging a single-use table buys nothing and costs
-    a materialization."""
+    the trigram level only).  ``stage`` is passed through to
+    :func:`train_bigram_lm` (rho1 stages, the trigram scorer does
+    not).  The trigram table itself has exactly ONE consumer, so it is
+    never checkpointed — staging a single-use table buys nothing and
+    costs a materialization."""
     bigrams, unigrams, totals = train_bigram_lm(df, text_col, stage=stage)
     trigrams = (
         df.select(F.explode(_trigrams(text_col)).alias("tg"))
@@ -473,7 +446,6 @@ def trigram_logprob(
     score: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stage: bool = False,
 ) -> DataFrame:
     """Mean trigram log-probability under stupid backoff (Brants et
     al. 2007 — the exact scheme web-scale MT used at Google, designed
@@ -500,9 +472,7 @@ def trigram_logprob(
     vocabulary-bounded aggregates joined on their n-gram keys (AQE
     broadcasts while they fit, shuffles by key once they don't);
     nothing collects to the driver."""
-    trigrams, bigrams, unigrams, totals = train_trigram_lm(
-        train, text_col, stage=stage
-    )
+    trigrams, bigrams, unigrams, totals = train_trigram_lm(train, text_col)
 
     stream = score.select(
         F.col(id_col).alias("id"),
@@ -585,7 +555,6 @@ def rho1_token_select(
     keep_micro: int = 300_000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stage: bool = True,
 ) -> DataFrame:
     """RHO-1-style selective token scoring (Lin et al. 2024, "Not All
     Tokens Are What You Need"): score every position of a document
@@ -617,19 +586,14 @@ def rho1_token_select(
     array algebra (r13 — replaced the rank window; winner set proven
     identical, see below).
 
-    ``stage`` defaults TRUE (r13, the KN decision tree applied at
-    sf1): rho1's consumers prune the unigram/bigram subtrees
-    differently (the scorer joins want (w,c1)/(w1,w2,c2) under
-    renames, totals wants bare counts), so — exactly like Kneser-Ney
-    and unlike the stupid-backoff scorers — the final adaptive plan
-    shows ZERO ReusedExchange unstaged and the corpus explode+agg
-    re-runs per consumer (14 parquet scans at sf1).  Staged measured
-    0.93-0.94x at sf1 (interleaved A/B, both directions agree);
-    values identical either way (tests)."""
+    The unigram/bigram tables are staged: like Kneser-Ney, rho1's
+    consumers prune them differently (renamed join keys vs bare
+    counts for ``totals``), so AQE reuses no exchange (r13: staged
+    0.93-0.94x at sf1)."""
     if not (0 <= keep_micro <= MICRO):
         raise ValueError("keep_micro must be in [0, 1000000]")
     trigrams, bigrams, unigrams, totals = train_trigram_lm(
-        train, text_col, stage=stage
+        train, text_col, stage=True
     )
     stream = score.select(
         F.col(id_col).alias("id"),

@@ -672,28 +672,24 @@ def _assigned_with_norm(
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    stage: bool,
 ) -> DataFrame:
     """(id, centroid_id, v, nrm) assignment frame shared by the
     semantic-dedup pair stage and the survivors' final projection.
 
-    ``stage=True`` materializes it ONCE via an eager
-    ``localCheckpoint`` (the dsir stage= device — chosen over
-    ``persist()`` because a persisted plan is keyed on the
-    canonicalized plan and would be shared across repeated identical
-    calls, making bench re-runs time a cache hit).  Without staging
-    the assignment subtree (scan + |codebook| broadcast cosines +
-    argmax agg) is recomputed by every consumer: the bucket-count
-    agg, both sides of the pair join and the survivors projection —
-    four full passes at 100 TB."""
+    Staged once (eager ``localCheckpoint``): otherwise the assignment
+    subtree (scan + |codebook| broadcast cosines + argmax agg) is
+    recomputed by every consumer — the bucket-count agg, both sides
+    of the pair join and the survivors projection (r12).
+    ``localCheckpoint`` rather than ``persist()``: a persisted plan
+    is keyed on the canonicalized plan and shared across repeated
+    identical calls, so bench re-runs would time a cache hit."""
     from aws_cdk_pipelines_datalake_etl_spark.functions.vector import norm
 
-    b = assign_ivf_buckets(vectors, centroids, id_col, vec_col).withColumn(
-        "nrm", norm("v")
+    return (
+        assign_ivf_buckets(vectors, centroids, id_col, vec_col)
+        .withColumn("nrm", norm("v"))
+        .localCheckpoint(eager=True)
     )
-    if stage:
-        b = b.localCheckpoint(eager=True)
-    return b
 
 
 def semantic_dedup_pairs(
@@ -705,7 +701,6 @@ def semantic_dedup_pairs(
     max_bucket_rows: int | None = 4096,
     target_cluster_rows: int = 4096,
     seed: int = 42,
-    stage: bool = False,
     _assigned: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style bucketed near-duplicate pairs (Abbas et al.,
@@ -752,7 +747,7 @@ def semantic_dedup_pairs(
     b = (
         _assigned
         if _assigned is not None
-        else _assigned_with_norm(vectors, centroids, id_col, vec_col, stage)
+        else _assigned_with_norm(vectors, centroids, id_col, vec_col)
     )
     sim_expr = pround(dot("v1", "v2") / (F.col("n1") * F.col("n2")), 6)
 
@@ -832,7 +827,6 @@ def semantic_dedup_survivors(
     max_bucket_rows: int | None = 4096,
     target_cluster_rows: int = 4096,
     seed: int = 42,
-    stage: bool = False,
 ) -> DataFrame:
     """Semantic dedup keep-set: drop every vector that is the LARGER
     id of an epsilon-similar pair within its semantic cluster (i.e.
@@ -845,16 +839,15 @@ def semantic_dedup_survivors(
     :func:`semantic_dedup_pairs` block-grid skew guard (identical
     pair set, bounded per-task volume); ``centroids=None``
     auto-derives the codebook ONCE and reuses it for both the pair
-    stage and the final assignment.  ``stage=True`` additionally
-    computes the assignment frame ONCE (eager ``localCheckpoint``)
-    and shares it between the pair join's two sides, the bucket-count
-    agg and this final projection — r12, guide §2.4; the pair set and
-    survivor set are value-identical either way."""
+    stage and the final assignment.  The staged assignment frame
+    (:func:`_assigned_with_norm`) is computed once and shared by the
+    pair join's two sides, the bucket-count agg and this final
+    projection."""
     if centroids is None:
         centroids = derive_semantic_centroids(
             vectors, target_cluster_rows, seed, id_col, vec_col
         )
-    assigned = _assigned_with_norm(vectors, centroids, id_col, vec_col, stage)
+    assigned = _assigned_with_norm(vectors, centroids, id_col, vec_col)
     pairs = semantic_dedup_pairs(
         vectors, centroids, threshold, id_col, vec_col,
         max_bucket_rows, target_cluster_rows, seed,

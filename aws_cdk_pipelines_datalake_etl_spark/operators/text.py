@@ -116,7 +116,6 @@ def tfidf_top_terms(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
-    stage: bool = True,
 ) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF.
 
@@ -128,12 +127,10 @@ def tfidf_top_terms(
     vocabulary size is corpus-dependent (broadcast when it fits,
     shuffle when not).
 
-    ``stage=True`` materializes the tf relation once (eager
-    ``localCheckpoint``): its two consumers prune different columns
-    (df-count wants ``term``, the join wants everything), the subtrees
-    stop being canonically equal, AQE reuses neither (0 ReusedExchange
-    measured r12 — the Kneser-Ney column-pruning disease), and
-    unstaged the corpus explode+agg ran twice.
+    The tf relation is staged (eager ``localCheckpoint``): its two
+    consumers prune different columns (df-count wants ``term``, the
+    join wants everything), so AQE reuses no exchange and unstaged the
+    corpus explode+agg ran twice (r12).
     """
     from pyspark.sql import Window
 
@@ -141,8 +138,7 @@ def tfidf_top_terms(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("term")
     )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    if stage:
-        tf = tf.localCheckpoint(eager=True)
+    tf = tf.localCheckpoint(eager=True)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

@@ -36,8 +36,7 @@ Scale shape — identical to BPE's production decomposition:
 - **Encoding is embarrassingly parallel**: the scored piece table
   broadcasts and each document Viterbi-segments row-locally in an
   Arrow-batched pandas UDF (with a per-batch word cache — Zipf makes
-  the hit rate high).  Zero shuffle; ``repartition`` dial for
-  few-splits inputs, same as ``bpe_encode_ids``.
+  the hit rate high).  Zero shuffle.
 
 Words carry the SentencePiece word-boundary marker ``▁`` as a PREFIX
 (BPE here uses an end-of-word suffix; the prefix form is the
@@ -327,7 +326,6 @@ def unigram_encode_ids(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_piece_len: int = 4,
-    repartition: int | None = None,
 ) -> DataFrame:
     """Row-local Viterbi encoding to token-id sequences — the unigram
     twin of ``bpe_encode_ids``, same output surface ``(id, token_ids
@@ -336,9 +334,7 @@ def unigram_encode_ids(
     charset make a word partially unsegmentable: its unreachable
     characters map to UNK one by one (SentencePiece's byte-fallback
     seam, documented, not implemented).  Broadcast model, Arrow
-    batches, zero shuffle (``repartition`` dial as in BPE)."""
-    if repartition:
-        df = df.repartition(repartition)
+    batches, zero shuffle."""
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,

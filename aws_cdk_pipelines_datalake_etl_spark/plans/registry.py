@@ -1699,16 +1699,13 @@ def text_langid_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables equal value-for-value).  Plan (round 9): broadcast LEFT
     model join on trigram occurrences + ONE hash agg (pivoted
     per-language conditional sums) + row-local argmax/margin — one
-    doc-proportional exchange, was three; repartition= widens the
+    doc-proportional exchange, was three; the operator widens the
     single-file-parquet scan to all cores before the ~300x explode."""
     from aws_cdk_pipelines_datalake_etl_spark.operators.langid import (
         language_id_nb,
     )
 
-    return language_id_nb(
-        _t(spark, sf_dir, "documents"),
-        repartition=spark.sparkContext.defaultParallelism,
-    )
+    return language_id_nb(_t(spark, sf_dir, "documents"))
 
 
 def text_langid_confident(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1725,9 +1722,7 @@ def text_langid_confident(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return language_id_nb(
-        _t(spark, sf_dir, "documents"),
-        min_margin_micro=3000,
-        repartition=spark.sparkContext.defaultParallelism,
+        _t(spark, sf_dir, "documents"), min_margin_micro=3000
     )
 
 
@@ -1746,10 +1741,7 @@ def text_script_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         dominant_script,
     )
 
-    return dominant_script(
-        _t(spark, sf_dir, "documents"),
-        repartition=spark.sparkContext.defaultParallelism,
-    )
+    return dominant_script(_t(spark, sf_dir, "documents"))
 
 
 def _script_id_oracle() -> str:
@@ -5120,11 +5112,7 @@ def corpus_training_set_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     confident = (
-        language_id_nb(
-            docs,
-            min_margin_micro=3000,
-            repartition=spark.sparkContext.defaultParallelism,
-        )
+        language_id_nb(docs, min_margin_micro=3000)
         .filter(F.col("lang") != "und")
         .select("doc_id", "lang")
     )
@@ -5790,9 +5778,7 @@ def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    return sim.semantic_dedup_survivors(
-        e, centroids, threshold=0.4, stage=True
-    )
+    return sim.semantic_dedup_survivors(e, centroids, threshold=0.4)
 
 
 DEDUP_SEMANTIC_ORACLE = """
@@ -5840,7 +5826,7 @@ def dedup_semantic_skewguard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
     return sim.semantic_dedup_survivors(
-        e, centroids, threshold=0.4, max_bucket_rows=64, stage=True
+        e, centroids, threshold=0.4, max_bucket_rows=64
     )
 
 
@@ -7907,10 +7893,7 @@ def corpus_packed_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, vocab = train_bpe_with_vocab(
         train, n_merges=120, specials=("<|endoftext|>",)
     )
-    encoded = bpe_encode_ids(
-        held, merges, vocab,
-        repartition=spark.sparkContext.defaultParallelism,
-    )
+    encoded = bpe_encode_ids(held, merges, vocab)
     packed = pack_token_sequences(
         encoded,
         budget_tokens=64,
@@ -8421,7 +8404,7 @@ def corpus_training_set_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     w = dsir_weights(
-        docs, F.col("source").isin("src0", "src1"), dim=4096, stage=True
+        docs, F.col("source").isin("src0", "src1"), dim=4096
     )
     sel = dsir_topk(w, k=200).select("doc_id")
     ids = docs.join(sel, "doc_id").select(
@@ -8761,7 +8744,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     and floor-quantized (the langid device), so the DuckDB oracle
     retrains BOTH models in SQL and the weights hash-verify.  Plan:
     one Generate+Project gram fan-out, one (doc, slot) hash agg
-    STAGED ONCE (stage=True — eager localCheckpoint, the r9-judge
+    STAGED ONCE (eager localCheckpoint, the r9-judge
     feature-staging seam; at 100 TB the same table goes to parquet
     via dsir_feature_counts + feats=), a <=4096-row model agg (the
     only collect — bounded control data), broadcast lambda join, one
@@ -8774,7 +8757,6 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         F.col("source").isin("src0", "src1"),
         dim=4096,
-        stage=True,
     )
 
 
@@ -8793,7 +8775,6 @@ def sample_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         F.col("source").isin("src0", "src1"),
         dim=4096,
-        stage=True,
     )
     return dsir_topk(w, k=100)
 
@@ -8946,7 +8927,6 @@ def sample_dsir_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         F.col("source").isin("src0", "src1"),
         dim=4096,
-        stage=True,
     )
     return dsir_gumbel_topk(w, k=100)
 
@@ -8989,7 +8969,6 @@ def sample_dsir_gumbel_per_source(spark: SparkSession, sf_dir: str) -> DataFrame
         docs,
         F.col("source").isin("src0", "src1"),
         dim=4096,
-        stage=True,
     ).join(docs.select("doc_id", "source"), "doc_id")
     return dsir_gumbel_topk_stratified(
         w, {"src2": 20, "src3": 10, "src4": 5}
@@ -10589,9 +10568,7 @@ def corpus_language_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    lid = language_id_nb(
-        docs, repartition=spark.sparkContext.defaultParallelism
-    ).select("doc_id", "lang")
+    lid = language_id_nb(docs).select("doc_id", "lang")
     nt = docs.select(
         "doc_id", "source", token_count("text").cast("long").alias("_nt")
     )

@@ -263,14 +263,7 @@ class PipelineRunner:
     def scan_raw_zone(self) -> list[RunResult]:
         """Directory-poll variant of the S3 OBJECT_CREATED trigger
         (O1): process every file currently in the raw zone."""
-        results = []
-        root = Path(self.layout.raw)
-        if not root.is_dir():
-            return results
-        for p in sorted(root.rglob("*")):
-            if p.is_file():
-                results.append(self.on_file(str(p.relative_to(root))))
-        return results
+        return self.watch(polls=1)
 
     def watch(
         self,

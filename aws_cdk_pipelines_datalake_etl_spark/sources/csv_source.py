@@ -10,29 +10,30 @@ the schema pass it and get a single-pass scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StructType
+
+
+def _csv_reader(spark: SparkSession) -> DataFrameReader:
+    """The reference's raw CSV dialect: header row, comma delimiter."""
+    return (
+        spark.read.format("csv")
+        .option("header", "true")
+        .option("delimiter", ",")
+    )
 
 
 def read_raw_csv(
     spark: SparkSession,
     path: str,
     schema: StructType | None = None,
-    header: bool = True,
-    delimiter: str = ",",
-    mode: str = "DROPMALFORMED",
 ) -> DataFrame:
     """Read a raw CSV file/directory the way the reference job does.
 
     Parity: etl_raw_to_conformed.py:180-185 (format csv, header true,
     delimiter ',', inferSchema true, mode DROPMALFORMED).
     """
-    reader = (
-        spark.read.format("csv")
-        .option("header", str(header).lower())
-        .option("delimiter", delimiter)
-        .option("mode", mode)
-    )
+    reader = _csv_reader(spark).option("mode", "DROPMALFORMED")
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -44,8 +45,6 @@ def read_raw_csv_quarantine(
     spark: SparkSession,
     path: str,
     schema: StructType | None = None,
-    header: bool = True,
-    delimiter: str = ",",
     corrupt_col: str = "_corrupt_record",
 ) -> DataFrame:
     """PERMISSIVE raw read that KEEPS malformed rows: well-formed rows
@@ -66,20 +65,13 @@ def read_raw_csv_quarantine(
 
     if schema is None:
         inferred = (
-            spark.read.format("csv")
-            .option("header", str(header).lower())
-            .option("delimiter", delimiter)
-            .option("inferSchema", "true")
-            .load(path)
-            .schema
+            _csv_reader(spark).option("inferSchema", "true").load(path).schema
         )
     else:
         inferred = schema
     full = StructType(list(inferred.fields)).add(corrupt_col, StringType(), True)
     return (
-        spark.read.format("csv")
-        .option("header", str(header).lower())
-        .option("delimiter", delimiter)
+        _csv_reader(spark)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", corrupt_col)
         .schema(full)

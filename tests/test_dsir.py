@@ -226,10 +226,9 @@ def test_gumbel_topk_matches_python_and_differs_from_argmax(spark):
 
 
 def test_staging_seam_identical_weights(spark):
-    """The r9-judge feature-staging seam: stage=True (eager
-    localCheckpoint) and feats= (pre-staged dsir_feature_counts
-    table — the 100 TB parquet path) both produce weights
-    bit-identical to the recompute-twice default."""
+    """The r9-judge feature-staging seam: feats= (pre-staged
+    dsir_feature_counts table — the 100 TB parquet path) produces
+    weights bit-identical to the in-session staged default."""
     from aws_cdk_pipelines_datalake_etl_spark.operators.dsir import (
         dsir_feature_counts,
     )
@@ -243,11 +242,6 @@ def test_staging_seam_identical_weights(spark):
         (r["doc_id"], r["weight_micro"], r["n_grams"], r["is_target"])
         for r in dsir_weights(df, F.col("tgt"), dim=32).collect()
     }
-    staged = {
-        (r["doc_id"], r["weight_micro"], r["n_grams"], r["is_target"])
-        for r in dsir_weights(df, F.col("tgt"), dim=32, stage=True).collect()
-    }
-    assert staged == base
     feats = dsir_feature_counts(df, F.col("tgt"), dim=32)
     prestaged = {
         (r["doc_id"], r["weight_micro"], r["n_grams"], r["is_target"])

@@ -103,6 +103,18 @@ def test_plan_broadcasts_model_no_python(spark):
     # per-doc hash agg) — no SortMergeJoin, no Window over scored rows
     assert "SortMergeJoin" not in plan
     assert "Window" not in plan
+    # the scan is widened to the session's default parallelism before
+    # the explode (and before dominant_script's regex passes)
+    from aws_cdk_pipelines_datalake_etl_spark.operators.langid import (
+        dominant_script,
+    )
+
+    rr = f"RoundRobinPartitioning({spark.sparkContext.defaultParallelism})"
+    assert rr in plan
+    script_plan = (
+        dominant_script(df)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert rr in script_plan
 
 
 def test_margin_confidence_band(spark):

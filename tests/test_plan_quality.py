@@ -115,6 +115,9 @@ def test_packed_ids_single_udf_evaluation(spark):
 
     plan = formatted_plan(R.corpus_packed_ids(spark, SF_DIR_SMOKE))
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+    # the encode's input is widened to the session's default parallelism
+    n = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in plan
 
 
 def test_rho1_no_window_and_staged_model(spark):
@@ -150,7 +153,7 @@ def test_unigram_encode_single_udf_evaluation(spark):
     docs = load_table(spark, SF_DIR_SMOKE, "documents")
     scores = {"▁a": -1, "▁b": -2, "a": -3, "b": -4}
     vocab = {"<unk>": 0, "▁a": 1, "▁b": 2, "a": 3, "b": 4}
-    out = unigram_encode_ids(docs, scores, vocab, repartition=4).filter(
+    out = unigram_encode_ids(docs, scores, vocab).filter(
         F.size("token_ids") > 0
     )
     plan = formatted_plan(out)

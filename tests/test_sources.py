@@ -80,6 +80,43 @@ def test_cli_parser_modes():
     assert a.watch == 3 and a.poll_seconds == 0.5
 
 
+def test_cli_scan_processes_every_raw_file_in_key_order(
+    spark, lake_root, monkeypatch
+):
+    """``--scan`` runs the pipeline once per raw-zone file, in sorted
+    key order, and exits 0 when every run succeeds."""
+    import aws_cdk_pipelines_datalake_etl_spark as pkg
+    from aws_cdk_pipelines_datalake_etl_spark.__main__ import main
+
+    from tests.conftest import YELLOW_HEADER, YELLOW_ROWS
+
+    table = "tlc_taxi_data/yellow_taxi_trip_record"
+    keys = [f"{table}/yellow_tripdata_2020-0{m}.csv" for m in (8, 9)]
+    for key in reversed(keys):
+        path = os.path.join(lake_root, "raw", key)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as f:
+            f.write(YELLOW_HEADER + "\n" + "\n".join(YELLOW_ROWS) + "\n")
+
+    # the test session stands in for the CLI's own get_spark(), so the
+    # CLI's session defaults never leak into later tests
+    monkeypatch.setattr(pkg, "get_spark", lambda **_: spark)
+    seen = []
+    on_file = PipelineRunner.on_file
+
+    def spy(self, key):
+        seen.append(key)
+        return on_file(self, key)
+
+    monkeypatch.setattr(PipelineRunner, "on_file", spy)
+    transforms = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "transforms",
+    )
+    assert main(["--lake", lake_root, "--scan", "--transforms", transforms]) == 0
+    assert seen == keys
+
+
 def test_text_raw_file_through_pipeline(spark, lake_root):
     """Raw corpus lines (.txt): one row per line with source-file
     lineage, conformed into the partitioned lake like any source."""
