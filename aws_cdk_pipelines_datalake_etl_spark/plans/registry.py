@@ -49,7 +49,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     fn: QueryFn
     oracle: str | None
-    description: str = ""
 
 
 from aws_cdk_pipelines_datalake_etl_spark.operators.doremi import (
@@ -1625,7 +1624,7 @@ def dedup_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wn.winnow_overlap_pairs(_t(spark, sf_dir, "documents"), min_shared=2)
 
 
-def text_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality metrics (length, word count, punctuation/
     stopword/digit ratios, mean word length) as zero-shuffle Catalyst
     expressions (operators/text.py text_metrics)."""
@@ -6773,121 +6772,6 @@ SELECT doc_id, text, CAST(length(text) AS INT) AS n_chars FROM e
 """
 
 
-# --------------------------------------------------------------------------
-# Registry
-# --------------------------------------------------------------------------
-
-
-# The driver's correctness gate records the first 50 ``queries()``
-# entries (insertion order; observed cap in CORRECTNESS_r01-r06). The
-# window is ROTATED per round (judge r3 #6) so the driver's oracle —
-# not just the local replica — accumulates coverage.  Every
-# oracle-backed entry has been driver-verified at least once as of
-# round 6 (the two r6 hash-reds were oracle dtype bugs, values proven
-# exact; fixed in round 7 and re-windowed).  Steady-state policy:
-#   1. the 3-entry reference-parity core, every round;
-#   2. any entry added OR semantically changed this round;
-#   3. any oracle-backed entry never driver-verified;
-#   4. remaining slots re-confirm OLDEST-VERIFIED-FIRST (entries
-#      whose last green driver row is most rounds ago; alphabetical
-#      within a round to keep the order deterministic).
-# Only oracle-backed entries are windowed — a rows-only row can never
-# be hash-green, so rows-only ops (sketch estimates, ANN shortlists)
-# keep their stronger in-pytest gates (merge==direct, recall bounds)
-# and stay out of the driver window.  Everything NOT in the window is
-# still in ``queries()`` and is verified by scripts/oracle_check.py —
-# run automatically as tests/test_oracle_full.py (full-registry gate)
-# and committed as ORACLE_LOCAL.md per round.
-#
-# LATE-ENTRY RULE (VERDICT r6 #3, after 2 of 4 post-sweep r6 entries
-# bounced on a dtype the old lenient gate missed): any entry added or
-# changed AFTER the round's ORACLE_LOCAL close sweep must get a
-# targeted ``python scripts/oracle_check.py <name>`` run (logged in
-# the commit message) before it enters this window — otherwise it
-# stays OUT of the window until the next round.  The local gate is
-# now dtype-kind-strict (scripts/oracle_check.py +
-# tests/test_oracle_gate_strict.py), so a targeted run reproduces
-# exactly what the driver hashes.
-_DRIVER_WINDOW = [
-    # (1) reference-parity core (always driver-verified)
-    "q01_pricing_summary",
-    "q02_taxi_shape_agg",
-    "q23_sql_transform",
-    # (2) ROUND-12 TRIAGE (VERDICT r11 #1 — 50 entries owed against
-    # 47 non-core slots; the judge's priority order applied exactly):
-    # (a) the three round-11 late entries that have ONLY local
-    # verification (logged targeted oracle_check runs, never
-    # driver-verified):
-    "corpus_drift_report",
-    "corpus_semantic_decontaminated",
-    "corpus_language_mix",
-    # (b) all 43 round-7 entries — every entry whose last driver-green
-    # row is round 7 (the full r7 window minus the four re-confirmed
-    # since: dedup_substring_spans_prod, multimodal_audio_adpcm,
-    # text_gopher_rules, web_robots_filter):
-    "corpus_training_set",
-    "dedup_clusters",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "incremental_rollup",
-    "join_salted_skew",
-    "lm_bigram_logprob",
-    "lm_perplexity_buckets",
-    "lm_perplexity_cutpoints",
-    "multimodal_decode_jpeg_progressive",
-    "multimodal_decode_png_adam7",
-    "multimodal_meta",
-    "q06_broadcast_dim_join",
-    "q07_revenue_top_orders",
-    "q09_anti_join",
-    "q11_window_topk_per_group",
-    "q13_sessionize",
-    "q14_set_ops",
-    "q16_rollup",
-    "q19_pivot",
-    "q21_correlated_subquery",
-    "q24_grouping_sets",
-    "q27_percentiles",
-    "q29_pandas_udf_score",
-    "q30_range_join",
-    "q35_trailing_window",
-    "q61_recursive_closure",
-    "retrieval_metrics_bm25",
-    "retrieval_rrf_fusion",
-    "sample_stratified",
-    "sim_brute_topk",
-    "sim_lsh_near_dup",
-    "sim_random_projection",
-    "sketch_theta_audience",
-    "source_jsonl_roundtrip",
-    "web_domain_split",
-    "web_domain_stats",
-    "web_frontier_dedup",
-    "web_html_extract",
-    "web_pagerank",
-    "web_url_normalize",
-    # (c) one of the four ADVICE-displaced round-10 entries fits the
-    # remaining slot (alphabetical pick; all four were driver-green in
-    # round 10, their r11 fixes are value-identical, and each carries
-    # a logged targeted oracle_check):
-    "corpus_quality_znorm",
-    # ROUND-13 WINDOW OWES: the other three ADVICE-displaced entries
-    # (dedup_quality_canonical — re-checked again this round after the
-    # r12 quality_col type-guard, sample_epoch_plan,
-    # sample_mixture_plan), plus every entry changed or added in round
-    # 12 (each with a logged targeted oracle_check in its commit):
-    # sample_doremi_weights + corpus_training_set_v4 (driver-green in
-    # r11; value-identical (source,term,count) pre-agg + decimal
-    # accumulate per VERDICT r11 #2 / ADVICE r11), and the five NEW
-    # r12 entries: sample_doremi_external_loss, dedup_block_units_md5,
-    # sample_unimax_budget, corpus_rho1_selection,
-    # corpus_training_set_v5.  That is 10 owed against 47 slots — the
-    # oversubscription is resolved.
-]
-
-
 def sketch_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable HLL sketch rollup (operators/sketches.py): one scan
     builds a per-(day, event_type) sketch table; per-type distinct
@@ -10622,513 +10506,286 @@ FROM mix m JOIN tot t USING (source)
 """
 
 
+# --------------------------------------------------------------------------
+# Registry
+# --------------------------------------------------------------------------
+
+
+# One row per query: (function, DuckDB oracle SQL or None).  A query's
+# registry name is its function's name, and this list's order is the
+# order of ``queries()``.  The driver's correctness gate hash-checks
+# only the first 50 rows, so the head of the list is the driver window.
+# Fill it in this priority order:
+#   1. the 3-entry reference-parity core, always;
+#   2. entries added or semantically changed since the last window;
+#   3. oracle-backed entries never driver-verified;
+#   4. the rest oldest-verified-first (alphabetical within a round).
+# Only oracle-backed rows go in the window: a rows-only row can never
+# be hash-green, so rows-only ops keep their pytest gates (merge ==
+# direct, recall bounds).  Late-entry rule: an entry added or changed
+# after the round's ORACLE_LOCAL.md sweep enters the window only after
+# a logged ``python scripts/oracle_check.py <name>`` run.  Every row,
+# in the window or not, is swept by scripts/gen_oracle_local.py.
+QUERIES: list[tuple[QueryFn, str | None]] = [
+    (q01_pricing_summary, Q01_ORACLE),
+    (q02_taxi_shape_agg, Q02_ORACLE),
+    (q23_sql_transform, Q23_PORTABLE_SQL),
+    (corpus_drift_report, CORPUS_DRIFT_REPORT_ORACLE),
+    (corpus_semantic_decontaminated, CORPUS_SEMANTIC_DECONTAMINATED_ORACLE),
+    (corpus_language_mix, CORPUS_LANGUAGE_MIX_ORACLE),
+    (corpus_training_set, CORPUS_TRAINING_SET_ORACLE),
+    (dedup_clusters, DEDUP_CLUSTERS_ORACLE),
+    (dedup_exact, DEDUP_EXACT_ORACLE),
+    (dedup_minhash_lsh, _JACCARD_ORACLE),
+    (dedup_ngram_jaccard, _JACCARD_ORACLE),
+    (dedup_simhash, _simhash_oracle()),
+    (incremental_rollup, INCREMENTAL_ROLLUP_ORACLE),
+    (join_salted_skew, JOIN_SALTED_SKEW_ORACLE),
+    (lm_bigram_logprob, LM_BIGRAM_LOGPROB_ORACLE),
+    (lm_perplexity_buckets, LM_PERPLEXITY_BUCKETS_ORACLE),
+    (lm_perplexity_cutpoints, LM_PERPLEXITY_CUTPOINTS_ORACLE),
+    (multimodal_decode_jpeg_progressive, MULTIMODAL_JPEG_ORACLE),
+    (multimodal_decode_png_adam7, MULTIMODAL_PNG_ORACLE),
+    (multimodal_meta, MULTIMODAL_META_ORACLE),
+    (q06_broadcast_dim_join, Q06_ORACLE),
+    (q07_revenue_top_orders, Q07_ORACLE),
+    (q09_anti_join, Q09_ORACLE),
+    (q11_window_topk_per_group, Q11_ORACLE),
+    (q13_sessionize, Q13_ORACLE),
+    (q14_set_ops, Q14_ORACLE),
+    (q16_rollup, Q16_ORACLE),
+    (q19_pivot, Q19_ORACLE),
+    (q21_correlated_subquery, Q21_ORACLE),
+    (q24_grouping_sets, Q24_ORACLE),
+    (q27_percentiles, Q27_ORACLE),
+    (q29_pandas_udf_score, Q29_ORACLE),
+    (q30_range_join, Q30_ORACLE),
+    (q35_trailing_window, Q35_ORACLE),
+    (q61_recursive_closure, Q61_RECURSIVE_SQL),
+    (retrieval_metrics_bm25, RETRIEVAL_METRICS_ORACLE),
+    (retrieval_rrf_fusion, RETRIEVAL_RRF_FUSION_ORACLE),
+    (sample_stratified, _sample_stratified_oracle()),
+    (sim_brute_topk, SIM_BRUTE_TOPK_ORACLE),
+    (sim_lsh_near_dup, SIM_NEAR_DUP_ORACLE),
+    (sim_random_projection, SIM_RANDOM_PROJECTION_ORACLE),
+    (sketch_theta_audience, SKETCH_THETA_ORACLE),
+    (source_jsonl_roundtrip, SOURCE_ORC_ORACLE),
+    (web_domain_split, WEB_DOMAIN_SPLIT_ORACLE),
+    (web_domain_stats, WEB_DOMAIN_STATS_ORACLE),
+    (web_frontier_dedup, WEB_FRONTIER_DEDUP_ORACLE),
+    (web_html_extract, WEB_HTML_EXTRACT_ORACLE),
+    (web_pagerank, WEB_PAGERANK_ORACLE),
+    (web_url_normalize, WEB_URL_NORMALIZE_ORACLE),
+    (corpus_quality_znorm, CORPUS_QUALITY_ZNORM_ORACLE),
+    # ---- end of the driver window: the rows above are the first 50 ----
+    (q03_filter_project, Q03_ORACLE),
+    (q04_topk_orders, Q04_ORACLE),
+    (q05_limit_star, Q05_ORACLE),
+    (q08_semi_join, Q08_ORACLE),
+    (q10_outer_join_histogram, Q10_ORACLE),
+    (q12_window_running_sum, Q12_ORACLE),
+    (q15_having_distinct, Q15_ORACLE),
+    (q17_scalar_functions, Q17_ORACLE),
+    (q18_date_functions, Q18_ORACLE),
+    (q20_json_extract, Q20_ORACLE),
+    (q22_cube, Q22_ORACLE),
+    (q25_exists_correlated, Q25_ORACLE),
+    (q26_lateral_explode, Q26_ORACLE),
+    (q28_array_agg, Q28_ORACLE),
+    (range_join_binned, Q30_ORACLE),
+    (q31_shipping_priority, Q31_ORACLE),
+    (q32_regional_supplier_volume, Q32_ORACLE),
+    (q33_market_share, Q33_ORACLE),
+    (q34_window_navigation, Q34_ORACLE),
+    (sample_hash_deterministic, _sample_hash_oracle()),
+    (agg_salted_skew, AGG_SALTED_SKEW_ORACLE),
+    (approx_distinct_users, None),
+    (approx_quantiles, None),
+    (stream_stream_join, STREAM_STREAM_JOIN_ORACLE),
+    (cdc_latest_state, CDC_LATEST_STATE_ORACLE),
+    (stream_cdc_upsert, CDC_LATEST_STATE_ORACLE),
+    (cdc_scd2, CDC_SCD2_ORACLE),
+    (cdc_state_asof_time, CDC_STATE_ASOF_ORACLE),
+    (bucketed_join, BUCKETED_JOIN_ORACLE),
+    (q36_nation_volume, Q36_ORACLE),
+    (q37_returned_items, Q37_ORACLE),
+    (q38_priority_case, Q38_ORACLE),
+    (q39_promo_revenue, Q39_ORACLE),
+    (q40_avg_qty_subquery, Q40_ORACLE),
+    (q41_large_orders, Q41_ORACLE),
+    (q42_disjunctive_join, Q42_ORACLE),
+    (q43_dormant_customers, Q43_ORACLE),
+    (q44_supplier_variety, Q44_ORACLE),
+    (q45_retention_cohorts, Q45_ORACLE),
+    (q48_rolling_wau, Q48_ORACLE),
+    (q50_unpivot, Q50_ORACLE),
+    (q51_forecast_revenue, Q51_ORACLE),
+    (q52_product_profit, Q52_ORACLE),
+    (q53_top_supplier, Q53_ORACLE),
+    (q54_equidepth_histogram, Q54_ORACLE),
+    (q56_full_outer_join, Q56_ORACLE),
+    (q57_dense_grid_report, Q57_ORACLE),
+    (q58_event_transitions, Q58_ORACLE),
+    (q59_union_heterogeneous, Q59_ORACLE),
+    (q60_edit_distance, Q60_ORACLE),
+    (q49_variant_json, Q49_ORACLE),
+    (q46_funnel_stages, Q46_ORACLE),
+    (q47_reaggregation_rollup, Q47_ORACLE),
+    (ts_gapfill, TS_GAPFILL_ORACLE),
+    (ts_ewma, _ts_ewma_oracle()),
+    (sample_train_val_test, SAMPLE_SPLIT_ORACLE),
+    (sample_cap_per_class, SAMPLE_CAP_ORACLE),
+    (sample_quality_weighted, SAMPLE_WEIGHTED_ORACLE),
+    (sample_temperature_mix, SAMPLE_TEMPERATURE_ORACLE),
+    (sample_temperature_mix_t3, SAMPLE_TEMPERATURE_T3_ORACLE),
+    (dedup_semantic_survivors, DEDUP_SEMANTIC_ORACLE),
+    (dedup_semantic_skewguard, DEDUP_SEMANTIC_ORACLE),
+    (sample_source_rebalance, SAMPLE_REBALANCE_ORACLE),
+    (text_repetition_removal, TEXT_REPETITION_ORACLE),
+    (q55_ratio_to_report, Q55_ORACLE),
+    (stream_daily_distinct, STREAM_DAILY_DISTINCT_ORACLE),
+    (stream_static_join, STREAM_STATIC_JOIN_ORACLE),
+    (stream_left_outer_join, STREAM_LEFT_OUTER_ORACLE),
+    (text_quality_gate, TEXT_QUALITY_GATE_ORACLE),
+    (text_tfidf_top_terms, TEXT_TFIDF_ORACLE),
+    (text_top_bigrams, TEXT_TOP_BIGRAMS_ORACLE),
+    (text_chunk_windows, TEXT_CHUNK_ORACLE),
+    (text_pack_bins, TEXT_PACK_ORACLE),
+    (text_pack_offsets, TEXT_PACK_OFFSETS_ORACLE),
+    (stream_sliding, STREAM_SLIDING_ORACLE),
+    (dedup_fingerprint, DEDUP_FINGERPRINT_ORACLE),
+    (dedup_simhash_pairs, _simhash_pairs_oracle()),
+    (q68_numeric_profile, Q68_PROFILE_SQL),
+    (q70_map_functions, Q70_MAP_ORACLE),
+    (q69_suppliers_who_kept_waiting, Q69_WAITING_SQL),
+    (text_boilerplate_ratio, TEXT_BOILERPLATE_ORACLE),
+    (text_oov_rate, TEXT_OOV_ORACLE),
+    (sketch_cm_heavy_hitters, _cm_heavy_hitters_oracle()),
+    (sketch_cm_topk, _cm_topk_oracle()),
+    (dedup_winnow_fingerprints, _winnow_fp_oracle),
+    (dedup_winnow_overlap, _winnow_ov_oracle),
+    (dedup_incremental_fingerprint, DEDUP_INCREMENTAL_FP_ORACLE),
+    (dedup_incremental_lsh, DEDUP_INCREMENTAL_LSH_ORACLE),
+    (dedup_bloom_prefilter, DEDUP_BLOOM_ORACLE),
+    (corpus_dedup_survivors, CORPUS_SURVIVORS_ORACLE),
+    (corpus_training_set_v3, CORPUS_TRAINING_SET_V3_ORACLE),
+    (corpus_training_set_v2, _training_set_v2_oracle()),
+    (corpus_data_card, CORPUS_DATA_CARD_ORACLE),
+    (corpus_epoch_shuffle, CORPUS_EPOCH_SHUFFLE_ORACLE),
+    (text_unigram_logprob, TEXT_UNIGRAM_LOGPROB_ORACLE),
+    (source_python_datasource, SOURCE_PYTHON_DATASOURCE_ORACLE),
+    (source_python_stream, SOURCE_PYTHON_STREAM_ORACLE),
+    (source_python_stream_partitioned, SOURCE_PYTHON_STREAM_ORACLE),
+    (sink_python_stream_writer, SOURCE_PYTHON_STREAM_ORACLE),
+    (udtf_word_ngrams, UDTF_WORD_NGRAMS_ORACLE),
+    (text_pseudonymize, TEXT_PSEUDONYMIZE_ORACLE),
+    (text_metrics, TEXT_METRICS_ORACLE),
+    (text_langid, _langid_oracle()),
+    (text_langid_nb, _langid_nb_oracle()),
+    (text_langid_confident, _langid_nb_oracle(min_margin_micro=3000)),
+    (text_script_id, _script_id_oracle()),
+    (text_token_count, TEXT_TOKEN_COUNT_ORACLE),
+    (sim_contrastive_triplets, SIM_CONTRASTIVE_TRIPLETS_ORACLE),
+    (sim_near_dup_pairs, SIM_NEAR_DUP_ORACLE),
+    (sim_ivf_topk, None),
+    (sim_ivf_full_probe, SIM_BRUTE_TOPK_ORACLE),
+    (sim_pq_rerank_topk, None),
+    (sim_pq_full_rerank, SIM_BRUTE_TOPK_ORACLE),
+    (sim_ivfpq_topk, None),
+    (sim_ivfpq_full, SIM_BRUTE_TOPK_ORACLE),
+    (sim_ivfpq_index_full_probe, SIM_BRUTE_TOPK_ORACLE),
+    (sim_ivfpq_bcast_full, SIM_BRUTE_TOPK_ORACLE),
+    (sim_ivfpq_residual_full, SIM_BRUTE_TOPK_ORACLE),
+    (sim_ivf_index_full_probe, SIM_BRUTE_TOPK_ORACLE),
+    (sim_ivf_trained, None),
+    (sim_ann_recall_trained, None),
+    (asof_forward_next_purchase, ASOF_FORWARD_ORACLE),
+    (dq_report, DQ_REPORT_ORACLE),
+    (asof_view_to_purchase, ASOF_ORACLE),
+    (stream_tumbling, STREAM_TUMBLING_ORACLE),
+    (stream_session_window, STREAM_SESSION_WINDOW_ORACLE),
+    (stream_sessionize_stateful, STREAM_SESSIONIZE_STATEFUL_ORACLE),
+    (stream_late_drop, STREAM_LATE_DROP_ORACLE),
+    (multimodal_image_resize, MULTIMODAL_RESIZE_ORACLE),
+    (multimodal_decode_jpeg, MULTIMODAL_JPEG_ORACLE),
+    (multimodal_decode_png, MULTIMODAL_PNG_ORACLE),
+    (multimodal_audio_adpcm, MULTIMODAL_ADPCM_ORACLE),
+    (multimodal_audio_features, MULTIMODAL_AUDIO_ORACLE),
+    (multimodal_video_frames, MULTIMODAL_VIDEO_ORACLE),
+    (multimodal_embed_cosine, MULTIMODAL_EMBED_ORACLE),
+    (multimodal_embed_topk, MULTIMODAL_EMBED_TOPK_ORACLE),
+    (sketch_distinct_rollup, None),
+    (udaf_mad, UDAF_MAD_ORACLE),
+    (sketch_quantile_rollup, None),
+    (text_contamination, TEXT_CONTAMINATION_ORACLE),
+    (text_redact_pii, TEXT_REDACT_ORACLE),
+    (sim_quantize_embeddings, SIM_QUANTIZE_ORACLE),
+    (asof_cogroup_pandas, ASOF_ORACLE),
+    (q62_distribution_ranks, Q62_ORACLE),
+    (grouped_apply_zscore, GROUPED_ZSCORE_ORACLE),
+    (stream_dedup_within_watermark, STREAM_DEDUP_WW_ORACLE),
+    (cdc_table_diff, CDC_TABLE_DIFF_ORACLE),
+    (text_normalize, TEXT_NORMALIZE_ORACLE),
+    (q63_array_algebra, Q63_ORACLE),
+    (q64_filtered_aggregates, Q64_FILTER_SQL),
+    (q65_regexp_extract, Q65_ORACLE),
+    (q66_mode_aggregate, Q66_ORACLE),
+    (q67_null_safe_join, Q67_ORACLE),
+    (dedup_span_removal, DEDUP_SPAN_REMOVAL_ORACLE),
+    (dedup_substring_spans, DEDUP_SUBSTRING_ORACLE),
+    (dedup_substring_spans_prod, DEDUP_SUBSTRING_ORACLE),
+    (source_orc_roundtrip, SOURCE_ORC_ORACLE),
+    (text_repetition_metrics, TEXT_REPETITION_METRICS_ORACLE),
+    (multimodal_binaryfile_ingest, MULTIMODAL_BINARYFILE_ORACLE),
+    (web_robots_filter, WEB_ROBOTS_FILTER_ORACLE),
+    (retrieval_bm25_topk, RETRIEVAL_BM25_ORACLE),
+    (retrieval_hard_negatives, RETRIEVAL_HARD_NEGATIVES_ORACLE),
+    (lm_kneser_ney_logprob, LM_KNESER_NEY_ORACLE),
+    (text_fim_transform, TEXT_FIM_ORACLE),
+    (text_span_corruption, TEXT_SPAN_CORRUPTION_ORACLE),
+    (lm_perplexity_approx, None),
+    (tokenizer_bpe_encode, None),
+    (tokenizer_unigram_encode, None),
+    (text_compression_ratio, None),
+    (corpus_packed_ids, None),
+    (sample_epoch_plan, SAMPLE_EPOCH_PLAN_ORACLE),
+    (corpus_epoch_stream, CORPUS_EPOCH_STREAM_ORACLE),
+    (dedup_quality_canonical, DEDUP_QUALITY_CANONICAL_ORACLE),
+    (corpus_curriculum_order, CORPUS_CURRICULUM_ORDER_ORACLE),
+    (corpus_ngram_novelty, CORPUS_NGRAM_NOVELTY_ORACLE),
+    (corpus_source_overlap_sketch, CORPUS_SOURCE_OVERLAP_ORACLE),
+    (corpus_source_overlap, CORPUS_SOURCE_OVERLAP_ORACLE),
+    (corpus_pack_report, CORPUS_PACK_REPORT_ORACLE),
+    (text_pack_sequences, TEXT_PACK_SEQUENCES_ORACLE),
+    (corpus_quality_classifier, None),
+    (corpus_quality_scores, CORPUS_QUALITY_SCORES_ORACLE),
+    (corpus_dsir_weights, CORPUS_DSIR_WEIGHTS_ORACLE),
+    (sample_dsir_topk, SAMPLE_DSIR_TOPK_ORACLE),
+    (sample_dsir_gumbel, SAMPLE_DSIR_GUMBEL_ORACLE),
+    (sample_dsir_gumbel_per_source, SAMPLE_DSIR_GUMBEL_PER_SOURCE_ORACLE),
+    (sample_mixture_plan, SAMPLE_MIXTURE_PLAN_ORACLE),
+    (corpus_dsir_incremental, CORPUS_DSIR_WEIGHTS_ORACLE),
+    (text_gopher_rules, TEXT_GOPHER_ORACLE),
+    (dedup_block_units, DEDUP_BLOCK_UNITS_ORACLE),
+    (lm_trigram_backoff, LM_TRIGRAM_BACKOFF_ORACLE),
+    (sample_doremi_weights, SAMPLE_DOREMI_WEIGHTS_ORACLE),
+    (sample_doremi_external_loss, SAMPLE_DOREMI_EXTERNAL_LOSS_ORACLE),
+    (sample_unimax_budget, SAMPLE_UNIMAX_BUDGET_ORACLE),
+    (corpus_rho1_selection, CORPUS_RHO1_SELECTION_ORACLE),
+    (corpus_training_set_v5, CORPUS_TRAINING_SET_V5_ORACLE),
+    (corpus_repeat_value, CORPUS_REPEAT_VALUE_ORACLE),
+    (text_ul2_mixture, TEXT_UL2_MIXTURE_ORACLE),
+    (corpus_fertility_report, CORPUS_FERTILITY_REPORT_ORACLE),
+    (corpus_training_set_v4, CORPUS_TRAINING_SET_V4_ORACLE),
+    (lm_trigram_buckets, LM_TRIGRAM_BUCKETS_ORACLE),
+    (corpus_decontaminated, CORPUS_DECONTAMINATED_ORACLE),
+    (dedup_block_units_incremental, DEDUP_BLOCK_UNITS_INCREMENTAL_ORACLE),
+    (dedup_block_units_md5, DEDUP_BLOCK_UNITS_ORACLE),
+]
+
+
 def build_registry() -> dict[str, QuerySpec]:
-    reg = {
-        "q01_pricing_summary": QuerySpec(q01_pricing_summary, Q01_ORACLE),
-        "q02_taxi_shape_agg": QuerySpec(q02_taxi_shape_agg, Q02_ORACLE),
-        "q03_filter_project": QuerySpec(q03_filter_project, Q03_ORACLE),
-        "q04_topk_orders": QuerySpec(q04_topk_orders, Q04_ORACLE),
-        "q05_limit_star": QuerySpec(q05_limit_star, Q05_ORACLE),
-        "q06_broadcast_dim_join": QuerySpec(q06_broadcast_dim_join, Q06_ORACLE),
-        "q07_revenue_top_orders": QuerySpec(q07_revenue_top_orders, Q07_ORACLE),
-        "q08_semi_join": QuerySpec(q08_semi_join, Q08_ORACLE),
-        "q09_anti_join": QuerySpec(q09_anti_join, Q09_ORACLE),
-        "q10_outer_join_histogram": QuerySpec(q10_outer_join_histogram, Q10_ORACLE),
-        "q11_window_topk_per_group": QuerySpec(q11_window_topk_per_group, Q11_ORACLE),
-        "q12_window_running_sum": QuerySpec(q12_window_running_sum, Q12_ORACLE),
-        "q13_sessionize": QuerySpec(q13_sessionize, Q13_ORACLE),
-        "q14_set_ops": QuerySpec(q14_set_ops, Q14_ORACLE),
-        "q15_having_distinct": QuerySpec(q15_having_distinct, Q15_ORACLE),
-        "q16_rollup": QuerySpec(q16_rollup, Q16_ORACLE),
-        "q17_scalar_functions": QuerySpec(q17_scalar_functions, Q17_ORACLE),
-        "q18_date_functions": QuerySpec(q18_date_functions, Q18_ORACLE),
-        "q19_pivot": QuerySpec(q19_pivot, Q19_ORACLE),
-        "q20_json_extract": QuerySpec(q20_json_extract, Q20_ORACLE),
-        "q21_correlated_subquery": QuerySpec(q21_correlated_subquery, Q21_ORACLE),
-        "q22_cube": QuerySpec(q22_cube, Q22_ORACLE),
-        "q23_sql_transform": QuerySpec(q23_sql_transform, Q23_PORTABLE_SQL),
-        "q24_grouping_sets": QuerySpec(q24_grouping_sets, Q24_ORACLE),
-        "q25_exists_correlated": QuerySpec(q25_exists_correlated, Q25_ORACLE),
-        "q26_lateral_explode": QuerySpec(q26_lateral_explode, Q26_ORACLE),
-        "q27_percentiles": QuerySpec(q27_percentiles, Q27_ORACLE),
-        "q28_array_agg": QuerySpec(q28_array_agg, Q28_ORACLE),
-        "q29_pandas_udf_score": QuerySpec(q29_pandas_udf_score, Q29_ORACLE),
-        "q30_range_join": QuerySpec(q30_range_join, Q30_ORACLE),
-        "range_join_binned": QuerySpec(range_join_binned, Q30_ORACLE),
-        "q31_shipping_priority": QuerySpec(q31_shipping_priority, Q31_ORACLE),
-        "q32_regional_supplier_volume": QuerySpec(
-            q32_regional_supplier_volume, Q32_ORACLE
-        ),
-        "q33_market_share": QuerySpec(q33_market_share, Q33_ORACLE),
-        "q34_window_navigation": QuerySpec(q34_window_navigation, Q34_ORACLE),
-        "sample_hash_deterministic": QuerySpec(
-            sample_hash_deterministic, _sample_hash_oracle()
-        ),
-        "agg_salted_skew": QuerySpec(agg_salted_skew, AGG_SALTED_SKEW_ORACLE),
-        "approx_distinct_users": QuerySpec(approx_distinct_users, None),
-        "approx_quantiles": QuerySpec(approx_quantiles, None),
-        "stream_stream_join": QuerySpec(stream_stream_join, STREAM_STREAM_JOIN_ORACLE),
-        "join_salted_skew": QuerySpec(join_salted_skew, JOIN_SALTED_SKEW_ORACLE),
-        "cdc_latest_state": QuerySpec(cdc_latest_state, CDC_LATEST_STATE_ORACLE),
-        "stream_cdc_upsert": QuerySpec(stream_cdc_upsert, CDC_LATEST_STATE_ORACLE),
-        "cdc_scd2": QuerySpec(cdc_scd2, CDC_SCD2_ORACLE),
-        "cdc_state_asof_time": QuerySpec(
-            cdc_state_asof_time, CDC_STATE_ASOF_ORACLE
-        ),
-        "bucketed_join": QuerySpec(bucketed_join, BUCKETED_JOIN_ORACLE),
-        "q35_trailing_window": QuerySpec(q35_trailing_window, Q35_ORACLE),
-        "q36_nation_volume": QuerySpec(q36_nation_volume, Q36_ORACLE),
-        "q37_returned_items": QuerySpec(q37_returned_items, Q37_ORACLE),
-        "q38_priority_case": QuerySpec(q38_priority_case, Q38_ORACLE),
-        "q39_promo_revenue": QuerySpec(q39_promo_revenue, Q39_ORACLE),
-        "q40_avg_qty_subquery": QuerySpec(q40_avg_qty_subquery, Q40_ORACLE),
-        "q41_large_orders": QuerySpec(q41_large_orders, Q41_ORACLE),
-        "q42_disjunctive_join": QuerySpec(q42_disjunctive_join, Q42_ORACLE),
-        "q43_dormant_customers": QuerySpec(q43_dormant_customers, Q43_ORACLE),
-        "q44_supplier_variety": QuerySpec(q44_supplier_variety, Q44_ORACLE),
-        "q45_retention_cohorts": QuerySpec(q45_retention_cohorts, Q45_ORACLE),
-        "q48_rolling_wau": QuerySpec(q48_rolling_wau, Q48_ORACLE),
-        "q50_unpivot": QuerySpec(q50_unpivot, Q50_ORACLE),
-        "q51_forecast_revenue": QuerySpec(q51_forecast_revenue, Q51_ORACLE),
-        "q52_product_profit": QuerySpec(q52_product_profit, Q52_ORACLE),
-        "q53_top_supplier": QuerySpec(q53_top_supplier, Q53_ORACLE),
-        "q54_equidepth_histogram": QuerySpec(
-            q54_equidepth_histogram, Q54_ORACLE
-        ),
-        "q56_full_outer_join": QuerySpec(q56_full_outer_join, Q56_ORACLE),
-        "q57_dense_grid_report": QuerySpec(q57_dense_grid_report, Q57_ORACLE),
-        "q58_event_transitions": QuerySpec(q58_event_transitions, Q58_ORACLE),
-        "q59_union_heterogeneous": QuerySpec(
-            q59_union_heterogeneous, Q59_ORACLE
-        ),
-        "q60_edit_distance": QuerySpec(q60_edit_distance, Q60_ORACLE),
-        "q49_variant_json": QuerySpec(q49_variant_json, Q49_ORACLE),
-        "q46_funnel_stages": QuerySpec(q46_funnel_stages, Q46_ORACLE),
-        "q47_reaggregation_rollup": QuerySpec(
-            q47_reaggregation_rollup, Q47_ORACLE
-        ),
-        "ts_gapfill": QuerySpec(ts_gapfill, TS_GAPFILL_ORACLE),
-        "ts_ewma": QuerySpec(ts_ewma, _ts_ewma_oracle()),
-        "sample_stratified": QuerySpec(
-            sample_stratified, _sample_stratified_oracle()
-        ),
-        "sample_train_val_test": QuerySpec(
-            sample_train_val_test, SAMPLE_SPLIT_ORACLE
-        ),
-        "sample_cap_per_class": QuerySpec(sample_cap_per_class, SAMPLE_CAP_ORACLE),
-        "sample_quality_weighted": QuerySpec(
-            sample_quality_weighted, SAMPLE_WEIGHTED_ORACLE
-        ),
-        "sample_temperature_mix": QuerySpec(
-            sample_temperature_mix, SAMPLE_TEMPERATURE_ORACLE
-        ),
-        "sample_temperature_mix_t3": QuerySpec(
-            sample_temperature_mix_t3, SAMPLE_TEMPERATURE_T3_ORACLE
-        ),
-        "dedup_semantic_survivors": QuerySpec(
-            dedup_semantic_survivors, DEDUP_SEMANTIC_ORACLE
-        ),
-        # guard invariance: IDENTICAL oracle by design (VERDICT r5 #2)
-        "dedup_semantic_skewguard": QuerySpec(
-            dedup_semantic_skewguard, DEDUP_SEMANTIC_ORACLE
-        ),
-        "sample_source_rebalance": QuerySpec(
-            sample_source_rebalance, SAMPLE_REBALANCE_ORACLE
-        ),
-        "text_repetition_removal": QuerySpec(
-            text_repetition_removal, TEXT_REPETITION_ORACLE
-        ),
-        "q55_ratio_to_report": QuerySpec(q55_ratio_to_report, Q55_ORACLE),
-        "stream_daily_distinct": QuerySpec(
-            stream_daily_distinct, STREAM_DAILY_DISTINCT_ORACLE
-        ),
-        "stream_static_join": QuerySpec(
-            stream_static_join, STREAM_STATIC_JOIN_ORACLE
-        ),
-        "stream_left_outer_join": QuerySpec(
-            stream_left_outer_join, STREAM_LEFT_OUTER_ORACLE
-        ),
-        "text_quality_gate": QuerySpec(text_quality_gate, TEXT_QUALITY_GATE_ORACLE),
-        "text_tfidf_top_terms": QuerySpec(text_tfidf_top_terms, TEXT_TFIDF_ORACLE),
-        "text_top_bigrams": QuerySpec(text_top_bigrams, TEXT_TOP_BIGRAMS_ORACLE),
-        "text_chunk_windows": QuerySpec(text_chunk_windows, TEXT_CHUNK_ORACLE),
-        "text_pack_bins": QuerySpec(text_pack_bins, TEXT_PACK_ORACLE),
-        "text_pack_offsets": QuerySpec(text_pack_offsets, TEXT_PACK_OFFSETS_ORACLE),
-        "stream_sliding": QuerySpec(stream_sliding, STREAM_SLIDING_ORACLE),
-        "dedup_exact": QuerySpec(dedup_exact, DEDUP_EXACT_ORACLE),
-        "dedup_fingerprint": QuerySpec(dedup_fingerprint, DEDUP_FINGERPRINT_ORACLE),
-        "dedup_ngram_jaccard": QuerySpec(dedup_ngram_jaccard, _JACCARD_ORACLE),
-        "dedup_minhash_lsh": QuerySpec(dedup_minhash_lsh, _JACCARD_ORACLE),
-        "dedup_simhash": QuerySpec(dedup_simhash, _simhash_oracle()),
-        "dedup_simhash_pairs": QuerySpec(
-            dedup_simhash_pairs, _simhash_pairs_oracle()
-        ),
-        "q68_numeric_profile": QuerySpec(q68_numeric_profile, Q68_PROFILE_SQL),
-        "q70_map_functions": QuerySpec(q70_map_functions, Q70_MAP_ORACLE),
-        "q69_suppliers_who_kept_waiting": QuerySpec(
-            q69_suppliers_who_kept_waiting, Q69_WAITING_SQL
-        ),
-        "text_boilerplate_ratio": QuerySpec(
-            text_boilerplate_ratio, TEXT_BOILERPLATE_ORACLE
-        ),
-        "text_oov_rate": QuerySpec(text_oov_rate, TEXT_OOV_ORACLE),
-        "sketch_cm_heavy_hitters": QuerySpec(
-            sketch_cm_heavy_hitters, _cm_heavy_hitters_oracle()
-        ),
-        "sketch_cm_topk": QuerySpec(sketch_cm_topk, _cm_topk_oracle()),
-        "dedup_winnow_fingerprints": QuerySpec(
-            dedup_winnow_fingerprints, _winnow_fp_oracle
-        ),
-        "dedup_winnow_overlap": QuerySpec(dedup_winnow_overlap, _winnow_ov_oracle),
-        "dedup_incremental_fingerprint": QuerySpec(
-            dedup_incremental_fingerprint, DEDUP_INCREMENTAL_FP_ORACLE
-        ),
-        "dedup_incremental_lsh": QuerySpec(
-            dedup_incremental_lsh, DEDUP_INCREMENTAL_LSH_ORACLE
-        ),
-        "dedup_bloom_prefilter": QuerySpec(
-            dedup_bloom_prefilter, DEDUP_BLOOM_ORACLE
-        ),
-        "dedup_clusters": QuerySpec(dedup_clusters, DEDUP_CLUSTERS_ORACLE),
-        "corpus_dedup_survivors": QuerySpec(
-            corpus_dedup_survivors, CORPUS_SURVIVORS_ORACLE
-        ),
-        "corpus_training_set": QuerySpec(
-            corpus_training_set, CORPUS_TRAINING_SET_ORACLE
-        ),
-        "corpus_training_set_v3": QuerySpec(
-            corpus_training_set_v3, CORPUS_TRAINING_SET_V3_ORACLE
-        ),
-        "corpus_training_set_v2": QuerySpec(
-            corpus_training_set_v2, _training_set_v2_oracle()
-        ),
-        "corpus_data_card": QuerySpec(corpus_data_card, CORPUS_DATA_CARD_ORACLE),
-        "corpus_epoch_shuffle": QuerySpec(
-            corpus_epoch_shuffle, CORPUS_EPOCH_SHUFFLE_ORACLE
-        ),
-        "text_unigram_logprob": QuerySpec(
-            text_unigram_logprob, TEXT_UNIGRAM_LOGPROB_ORACLE
-        ),
-        "source_python_datasource": QuerySpec(
-            source_python_datasource, SOURCE_PYTHON_DATASOURCE_ORACLE
-        ),
-        "source_python_stream": QuerySpec(
-            source_python_stream, SOURCE_PYTHON_STREAM_ORACLE
-        ),
-        "source_python_stream_partitioned": QuerySpec(
-            source_python_stream_partitioned, SOURCE_PYTHON_STREAM_ORACLE
-        ),
-        "sink_python_stream_writer": QuerySpec(
-            sink_python_stream_writer, SOURCE_PYTHON_STREAM_ORACLE
-        ),
-        "udtf_word_ngrams": QuerySpec(
-            udtf_word_ngrams, UDTF_WORD_NGRAMS_ORACLE
-        ),
-        "text_pseudonymize": QuerySpec(
-            text_pseudonymize, TEXT_PSEUDONYMIZE_ORACLE
-        ),
-        "text_metrics": QuerySpec(text_metrics_q, TEXT_METRICS_ORACLE),
-        "text_langid": QuerySpec(text_langid, _langid_oracle()),
-        "text_langid_nb": QuerySpec(text_langid_nb, _langid_nb_oracle()),
-        "text_langid_confident": QuerySpec(
-            text_langid_confident, _langid_nb_oracle(min_margin_micro=3000)
-        ),
-        "text_script_id": QuerySpec(text_script_id, _script_id_oracle()),
-        "text_token_count": QuerySpec(text_token_count, TEXT_TOKEN_COUNT_ORACLE),
-        "sim_brute_topk": QuerySpec(sim_brute_topk, SIM_BRUTE_TOPK_ORACLE),
-        "sim_contrastive_triplets": QuerySpec(
-            sim_contrastive_triplets, SIM_CONTRASTIVE_TRIPLETS_ORACLE
-        ),
-        "sim_near_dup_pairs": QuerySpec(sim_near_dup_pairs, SIM_NEAR_DUP_ORACLE),
-        "sim_lsh_near_dup": QuerySpec(sim_lsh_near_dup, SIM_NEAR_DUP_ORACLE),
-        "sim_ivf_topk": QuerySpec(sim_ivf_topk, None),
-        "sim_ivf_full_probe": QuerySpec(sim_ivf_full_probe, SIM_BRUTE_TOPK_ORACLE),
-        "sim_pq_rerank_topk": QuerySpec(sim_pq_rerank_topk, None),
-        "sim_pq_full_rerank": QuerySpec(sim_pq_full_rerank, SIM_BRUTE_TOPK_ORACLE),
-        "sim_ivfpq_topk": QuerySpec(sim_ivfpq_topk, None),
-        "sim_ivfpq_full": QuerySpec(sim_ivfpq_full, SIM_BRUTE_TOPK_ORACLE),
-        "sim_ivfpq_index_full_probe": QuerySpec(
-            sim_ivfpq_index_full_probe, SIM_BRUTE_TOPK_ORACLE
-        ),
-        "sim_ivfpq_bcast_full": QuerySpec(
-            sim_ivfpq_bcast_full, SIM_BRUTE_TOPK_ORACLE
-        ),
-        "sim_ivfpq_residual_full": QuerySpec(
-            sim_ivfpq_residual_full, SIM_BRUTE_TOPK_ORACLE
-        ),
-        "sim_ivf_index_full_probe": QuerySpec(
-            sim_ivf_index_full_probe, SIM_BRUTE_TOPK_ORACLE
-        ),
-        "sim_ivf_trained": QuerySpec(sim_ivf_trained, None),
-        "sim_ann_recall_trained": QuerySpec(sim_ann_recall_trained, None),
-        "asof_forward_next_purchase": QuerySpec(
-            asof_forward_next_purchase, ASOF_FORWARD_ORACLE
-        ),
-        "incremental_rollup": QuerySpec(
-            incremental_rollup, INCREMENTAL_ROLLUP_ORACLE
-        ),
-        "dq_report": QuerySpec(dq_report, DQ_REPORT_ORACLE),
-        "asof_view_to_purchase": QuerySpec(asof_view_to_purchase, ASOF_ORACLE),
-        "stream_tumbling": QuerySpec(stream_tumbling, STREAM_TUMBLING_ORACLE),
-        "stream_session_window": QuerySpec(
-            stream_session_window, STREAM_SESSION_WINDOW_ORACLE
-        ),
-        "stream_sessionize_stateful": QuerySpec(
-            stream_sessionize_stateful, STREAM_SESSIONIZE_STATEFUL_ORACLE
-        ),
-        "stream_late_drop": QuerySpec(stream_late_drop, STREAM_LATE_DROP_ORACLE),
-        "multimodal_meta": QuerySpec(multimodal_meta, MULTIMODAL_META_ORACLE),
-        "multimodal_image_resize": QuerySpec(
-            multimodal_image_resize, MULTIMODAL_RESIZE_ORACLE
-        ),
-        "multimodal_decode_jpeg": QuerySpec(
-            multimodal_decode_jpeg, MULTIMODAL_JPEG_ORACLE
-        ),
-        "multimodal_decode_jpeg_progressive": QuerySpec(
-            multimodal_decode_jpeg_progressive, MULTIMODAL_JPEG_ORACLE
-        ),
-        "multimodal_decode_png": QuerySpec(
-            multimodal_decode_png, MULTIMODAL_PNG_ORACLE
-        ),
-        "multimodal_decode_png_adam7": QuerySpec(
-            multimodal_decode_png_adam7, MULTIMODAL_PNG_ORACLE
-        ),
-        "multimodal_audio_adpcm": QuerySpec(
-            multimodal_audio_adpcm, MULTIMODAL_ADPCM_ORACLE
-        ),
-        "multimodal_audio_features": QuerySpec(
-            multimodal_audio_features, MULTIMODAL_AUDIO_ORACLE
-        ),
-        "multimodal_video_frames": QuerySpec(
-            multimodal_video_frames, MULTIMODAL_VIDEO_ORACLE
-        ),
-        "multimodal_embed_cosine": QuerySpec(
-            multimodal_embed_cosine, MULTIMODAL_EMBED_ORACLE
-        ),
-        "multimodal_embed_topk": QuerySpec(
-            multimodal_embed_topk, MULTIMODAL_EMBED_TOPK_ORACLE
-        ),
-        "sketch_distinct_rollup": QuerySpec(sketch_distinct_rollup, None),
-        "udaf_mad": QuerySpec(udaf_mad, UDAF_MAD_ORACLE),
-        "sketch_theta_audience": QuerySpec(
-            sketch_theta_audience, SKETCH_THETA_ORACLE
-        ),
-        "sketch_quantile_rollup": QuerySpec(sketch_quantile_rollup, None),
-        "q61_recursive_closure": QuerySpec(
-            q61_recursive_closure, Q61_RECURSIVE_SQL
-        ),
-        "text_contamination": QuerySpec(
-            text_contamination, TEXT_CONTAMINATION_ORACLE
-        ),
-        "text_redact_pii": QuerySpec(text_redact_pii, TEXT_REDACT_ORACLE),
-        "sim_quantize_embeddings": QuerySpec(
-            sim_quantize_embeddings, SIM_QUANTIZE_ORACLE
-        ),
-        "asof_cogroup_pandas": QuerySpec(asof_cogroup_pandas, ASOF_ORACLE),
-        "q62_distribution_ranks": QuerySpec(
-            q62_distribution_ranks, Q62_ORACLE
-        ),
-        "grouped_apply_zscore": QuerySpec(
-            grouped_apply_zscore, GROUPED_ZSCORE_ORACLE
-        ),
-        "stream_dedup_within_watermark": QuerySpec(
-            stream_dedup_within_watermark, STREAM_DEDUP_WW_ORACLE
-        ),
-        "cdc_table_diff": QuerySpec(cdc_table_diff, CDC_TABLE_DIFF_ORACLE),
-        "text_normalize": QuerySpec(text_normalize, TEXT_NORMALIZE_ORACLE),
-        "q63_array_algebra": QuerySpec(q63_array_algebra, Q63_ORACLE),
-        "q64_filtered_aggregates": QuerySpec(
-            q64_filtered_aggregates, Q64_FILTER_SQL
-        ),
-        "q65_regexp_extract": QuerySpec(q65_regexp_extract, Q65_ORACLE),
-        "q66_mode_aggregate": QuerySpec(q66_mode_aggregate, Q66_ORACLE),
-        "q67_null_safe_join": QuerySpec(q67_null_safe_join, Q67_ORACLE),
-        "web_url_normalize": QuerySpec(
-            web_url_normalize, WEB_URL_NORMALIZE_ORACLE
-        ),
-        "web_domain_stats": QuerySpec(web_domain_stats, WEB_DOMAIN_STATS_ORACLE),
-        "dedup_span_removal": QuerySpec(
-            dedup_span_removal, DEDUP_SPAN_REMOVAL_ORACLE
-        ),
-        "dedup_substring_spans": QuerySpec(
-            dedup_substring_spans, DEDUP_SUBSTRING_ORACLE
-        ),
-        "dedup_substring_spans_prod": QuerySpec(
-            dedup_substring_spans_prod, DEDUP_SUBSTRING_ORACLE
-        ),
-        "sim_random_projection": QuerySpec(
-            sim_random_projection, SIM_RANDOM_PROJECTION_ORACLE
-        ),
-        "source_jsonl_roundtrip": QuerySpec(
-            source_jsonl_roundtrip, SOURCE_ORC_ORACLE
-        ),
-        "source_orc_roundtrip": QuerySpec(source_orc_roundtrip, SOURCE_ORC_ORACLE),
-        "text_repetition_metrics": QuerySpec(
-            text_repetition_metrics, TEXT_REPETITION_METRICS_ORACLE
-        ),
-        "web_domain_split": QuerySpec(web_domain_split, WEB_DOMAIN_SPLIT_ORACLE),
-        "multimodal_binaryfile_ingest": QuerySpec(
-            multimodal_binaryfile_ingest, MULTIMODAL_BINARYFILE_ORACLE
-        ),
-        "web_html_extract": QuerySpec(web_html_extract, WEB_HTML_EXTRACT_ORACLE),
-        "web_frontier_dedup": QuerySpec(
-            web_frontier_dedup, WEB_FRONTIER_DEDUP_ORACLE
-        ),
-        "web_robots_filter": QuerySpec(web_robots_filter, WEB_ROBOTS_FILTER_ORACLE),
-        "retrieval_bm25_topk": QuerySpec(
-            retrieval_bm25_topk, RETRIEVAL_BM25_ORACLE
-        ),
-        "retrieval_rrf_fusion": QuerySpec(
-            retrieval_rrf_fusion, RETRIEVAL_RRF_FUSION_ORACLE
-        ),
-        "retrieval_metrics_bm25": QuerySpec(
-            retrieval_metrics_bm25, RETRIEVAL_METRICS_ORACLE
-        ),
-        "retrieval_hard_negatives": QuerySpec(
-            retrieval_hard_negatives, RETRIEVAL_HARD_NEGATIVES_ORACLE
-        ),
-        "lm_bigram_logprob": QuerySpec(
-            lm_bigram_logprob, LM_BIGRAM_LOGPROB_ORACLE
-        ),
-        "lm_kneser_ney_logprob": QuerySpec(
-            lm_kneser_ney_logprob, LM_KNESER_NEY_ORACLE
-        ),
-        "text_fim_transform": QuerySpec(text_fim_transform, TEXT_FIM_ORACLE),
-        "text_span_corruption": QuerySpec(
-            text_span_corruption, TEXT_SPAN_CORRUPTION_ORACLE
-        ),
-        "lm_perplexity_buckets": QuerySpec(
-            lm_perplexity_buckets, LM_PERPLEXITY_BUCKETS_ORACLE
-        ),
-        "lm_perplexity_cutpoints": QuerySpec(
-            lm_perplexity_cutpoints, LM_PERPLEXITY_CUTPOINTS_ORACLE
-        ),
-        "lm_perplexity_approx": QuerySpec(lm_perplexity_approx, None),
-        "tokenizer_bpe_encode": QuerySpec(tokenizer_bpe_encode, None),
-        "tokenizer_unigram_encode": QuerySpec(tokenizer_unigram_encode, None),
-        "text_compression_ratio": QuerySpec(text_compression_ratio, None),
-        "corpus_packed_ids": QuerySpec(corpus_packed_ids, None),
-        "sample_epoch_plan": QuerySpec(
-            sample_epoch_plan, SAMPLE_EPOCH_PLAN_ORACLE
-        ),
-        "corpus_epoch_stream": QuerySpec(
-            corpus_epoch_stream, CORPUS_EPOCH_STREAM_ORACLE
-        ),
-        "dedup_quality_canonical": QuerySpec(
-            dedup_quality_canonical, DEDUP_QUALITY_CANONICAL_ORACLE
-        ),
-        "corpus_curriculum_order": QuerySpec(
-            corpus_curriculum_order, CORPUS_CURRICULUM_ORDER_ORACLE
-        ),
-        "corpus_quality_znorm": QuerySpec(
-            corpus_quality_znorm, CORPUS_QUALITY_ZNORM_ORACLE
-        ),
-        "corpus_ngram_novelty": QuerySpec(
-            corpus_ngram_novelty, CORPUS_NGRAM_NOVELTY_ORACLE
-        ),
-        "corpus_source_overlap_sketch": QuerySpec(
-            corpus_source_overlap_sketch, CORPUS_SOURCE_OVERLAP_ORACLE
-        ),
-        "corpus_source_overlap": QuerySpec(
-            corpus_source_overlap, CORPUS_SOURCE_OVERLAP_ORACLE
-        ),
-        "corpus_pack_report": QuerySpec(
-            corpus_pack_report, CORPUS_PACK_REPORT_ORACLE
-        ),
-        "text_pack_sequences": QuerySpec(
-            text_pack_sequences, TEXT_PACK_SEQUENCES_ORACLE
-        ),
-        "corpus_quality_classifier": QuerySpec(corpus_quality_classifier, None),
-        "corpus_quality_scores": QuerySpec(
-            corpus_quality_scores, CORPUS_QUALITY_SCORES_ORACLE
-        ),
-        "corpus_dsir_weights": QuerySpec(
-            corpus_dsir_weights, CORPUS_DSIR_WEIGHTS_ORACLE
-        ),
-        "sample_dsir_topk": QuerySpec(
-            sample_dsir_topk, SAMPLE_DSIR_TOPK_ORACLE
-        ),
-        "sample_dsir_gumbel": QuerySpec(
-            sample_dsir_gumbel, SAMPLE_DSIR_GUMBEL_ORACLE
-        ),
-        "sample_dsir_gumbel_per_source": QuerySpec(
-            sample_dsir_gumbel_per_source,
-            SAMPLE_DSIR_GUMBEL_PER_SOURCE_ORACLE,
-        ),
-        "sample_mixture_plan": QuerySpec(
-            sample_mixture_plan, SAMPLE_MIXTURE_PLAN_ORACLE
-        ),
-        "corpus_dsir_incremental": QuerySpec(
-            corpus_dsir_incremental, CORPUS_DSIR_WEIGHTS_ORACLE
-        ),
-        "text_gopher_rules": QuerySpec(text_gopher_rules, TEXT_GOPHER_ORACLE),
-        "dedup_block_units": QuerySpec(
-            dedup_block_units, DEDUP_BLOCK_UNITS_ORACLE
-        ),
-        "lm_trigram_backoff": QuerySpec(
-            lm_trigram_backoff, LM_TRIGRAM_BACKOFF_ORACLE
-        ),
-        "sample_doremi_weights": QuerySpec(
-            sample_doremi_weights, SAMPLE_DOREMI_WEIGHTS_ORACLE
-        ),
-        "sample_doremi_external_loss": QuerySpec(
-            sample_doremi_external_loss, SAMPLE_DOREMI_EXTERNAL_LOSS_ORACLE
-        ),
-        "sample_unimax_budget": QuerySpec(
-            sample_unimax_budget, SAMPLE_UNIMAX_BUDGET_ORACLE
-        ),
-        "corpus_rho1_selection": QuerySpec(
-            corpus_rho1_selection, CORPUS_RHO1_SELECTION_ORACLE
-        ),
-        "corpus_training_set_v5": QuerySpec(
-            corpus_training_set_v5, CORPUS_TRAINING_SET_V5_ORACLE
-        ),
-        "corpus_repeat_value": QuerySpec(
-            corpus_repeat_value, CORPUS_REPEAT_VALUE_ORACLE
-        ),
-        "text_ul2_mixture": QuerySpec(
-            text_ul2_mixture, TEXT_UL2_MIXTURE_ORACLE
-        ),
-        "corpus_fertility_report": QuerySpec(
-            corpus_fertility_report, CORPUS_FERTILITY_REPORT_ORACLE
-        ),
-        "corpus_training_set_v4": QuerySpec(
-            corpus_training_set_v4, CORPUS_TRAINING_SET_V4_ORACLE
-        ),
-        "lm_trigram_buckets": QuerySpec(
-            lm_trigram_buckets, LM_TRIGRAM_BUCKETS_ORACLE
-        ),
-        "corpus_decontaminated": QuerySpec(
-            corpus_decontaminated, CORPUS_DECONTAMINATED_ORACLE
-        ),
-        "dedup_block_units_incremental": QuerySpec(
-            dedup_block_units_incremental,
-            DEDUP_BLOCK_UNITS_INCREMENTAL_ORACLE,
-        ),
-        "dedup_block_units_md5": QuerySpec(
-            dedup_block_units_md5, DEDUP_BLOCK_UNITS_ORACLE
-        ),
-        "corpus_drift_report": QuerySpec(
-            corpus_drift_report, CORPUS_DRIFT_REPORT_ORACLE
-        ),
-        "corpus_semantic_decontaminated": QuerySpec(
-            corpus_semantic_decontaminated,
-            CORPUS_SEMANTIC_DECONTAMINATED_ORACLE,
-        ),
-        "corpus_language_mix": QuerySpec(
-            corpus_language_mix, CORPUS_LANGUAGE_MIX_ORACLE
-        ),
-        "web_pagerank": QuerySpec(web_pagerank, WEB_PAGERANK_ORACLE),
-    }
-    missing = [n for n in _DRIVER_WINDOW if n not in reg]
-    assert not missing, f"_DRIVER_WINDOW names not in registry: {missing}"
-    ordered = {n: reg[n] for n in _DRIVER_WINDOW}
-    ordered.update((n, s) for n, s in reg.items() if n not in ordered)
     return {
-        name: QuerySpec(
-            s.fn,
-            portable_round_sql(s.oracle) if s.oracle else None,
-            s.description,
-        )
-        for name, s in ordered.items()
+        fn.__name__: QuerySpec(fn, portable_round_sql(o) if o else None)
+        for fn, o in QUERIES
     }
