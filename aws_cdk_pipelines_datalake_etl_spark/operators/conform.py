@@ -223,8 +223,10 @@ def conform(
         .save(location)
     )
     n_rows = int(obs.get["n_rows"])
-    # catalog upsert after the write so the external location exists
-    # (same net state as the reference's upsert-then-write order)
+    # catalog upsert after the write: a failed write leaves the catalog
+    # untouched, whereas an upsert before it would already have run
+    # DROP+CREATE on a drifted schema (same net state as the
+    # reference's upsert-then-write order when the write succeeds)
     kept = catalog.upsert_table(
         spark,
         df,

@@ -1,7 +1,8 @@
 """The engine's query registry: every operator from SURVEY §2 plus the
-Tier-E large-scale-pipeline ops, each as
+Tier-E large-scale-pipeline ops, each one row of ``QUERIES`` (at the
+end of this module), named by its function:
 
-    name -> (spark_fn(spark, sf_dir) -> DataFrame,  oracle_sql | None)
+    (spark_fn(spark, sf_dir) -> DataFrame,  oracle_sql | None)
 
 The oracle SQL is ANSI/DuckDB-dialect over the same parquet tables and
 must produce the *identical* relation (same column names, same values)

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import json
 import traceback
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from datetime import datetime, timezone
 from pathlib import Path
 from typing import Callable
@@ -80,7 +80,6 @@ class PipelineRunner:
     spark: SparkSession
     layout: LakeLayout
     transforms_dir: str | None = None
-    purposebuilt_database: str | None = None  # default: <source_system>_purposebuilt
     notifier: Notifier | None = None
     clock: Callable[[], datetime] = field(
         default_factory=lambda: (lambda: datetime.now(timezone.utc))
@@ -128,15 +127,8 @@ class PipelineRunner:
         purposebuilt_rows: int | None = None,
     ) -> dict:
         return {
-            "execution_id": params.execution_id,
-            "source_system_name": params.source_system_name,
-            "table_name": params.table_name,
-            "base_file_name": params.base_file_name,
-            "source_path": params.source_path,
+            **asdict(params),
             "target_database_name": params.target_database_name,
-            "p_year": params.p_year,
-            "p_month": params.p_month,
-            "p_day": params.p_day,
             "status": status,
             "error_message": error_message,
             "conformed_rows": conformed_rows,
@@ -216,10 +208,6 @@ class PipelineRunner:
                     raise DataQualityError(
                         f"data quality gate failed: {detail}"
                     )
-            purpose_db = (
-                self.purposebuilt_database
-                or f"{params.source_system_name}_purposebuilt"
-            )
             try:
                 built = transform(
                     self.spark,
@@ -227,7 +215,7 @@ class PipelineRunner:
                     self.layout.conformed,
                     self.layout.purposebuilt,
                     transforms_dir=self.transforms_dir,
-                    target_database=purpose_db,
+                    target_database=f"{params.source_system_name}_purposebuilt",
                 )
                 purposebuilt_rows = built.n_rows  # observed during the write
             except TransformNotFoundError:

@@ -59,9 +59,10 @@ def main() -> int:
             "(local replica of the driver gate)\n\n"
             "Produced by `python scripts/gen_oracle_local.py` at sf0.01 over "
             "ALL registry\nentries (the driver's CORRECTNESS file records "
-            "only the first 50 — the\nwindow is ROTATED per round, see "
-            "`_DRIVER_WINDOW` in plans/registry.py;\nthis same sweep also "
-            "runs inside the test suite as\n`tests/test_oracle_full.py`, so "
+            "only the first 50 — the\nwindow is the first 50 rows of "
+            "`QUERIES` in plans/registry.py, rotated per round;\nthis "
+            "same sweep also runs inside the test suite as\n"
+            "`tests/test_oracle_full.py`, so "
             "out-of-window regressions fail pytest).\n"
             f"{('Run: ' + note + chr(10)) if note else ''}"
             f"Totals: {n_ok} exact hash-matches, {n_skip} rows-only "

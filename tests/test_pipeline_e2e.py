@@ -14,6 +14,24 @@ from aws_cdk_pipelines_datalake_etl_spark.runner import LakeLayout, PipelineRunn
 
 FIXED_NOW = datetime(2020, 8, 15, 12, 0, 0, tzinfo=timezone.utc)
 
+# every notification payload, SUCCEEDED or FAILED: the job parameters,
+# the target database and the run's outcome
+PAYLOAD_KEYS = {
+    "execution_id",
+    "source_system_name",
+    "table_name",
+    "base_file_name",
+    "source_path",
+    "p_year",
+    "p_month",
+    "p_day",
+    "target_database_name",
+    "status",
+    "error_message",
+    "conformed_rows",
+    "purposebuilt_rows",
+}
+
 
 @pytest.fixture()
 def runner(spark, lake_root):
@@ -68,7 +86,9 @@ def test_yellow_end_to_end(spark, runner, yellow_csv, lake_root):
     import json as _json
 
     payload = _json.loads(runner.notifications[-1][1])
+    assert set(payload) == PAYLOAD_KEYS
     assert payload["status"] == "SUCCEEDED"
+    assert payload["target_database_name"] == "tlc_taxi_data"
     assert payload["table_name"] == "yellow_taxi_trip_record"
     assert payload["source_system_name"] == "tlc_taxi_data"
     assert payload["base_file_name"] == "yellow_tripdata_2020-08.csv"
@@ -143,7 +163,9 @@ def test_failure_edge_audits_and_notifies(spark, runner, lake_root):
     import json as _json
 
     payload = _json.loads(runner.notifications[-1][1])
+    assert set(payload) == PAYLOAD_KEYS
     assert payload["status"] == "FAILED"
+    assert payload["conformed_rows"] is None
     assert payload["error_message"]
     assert payload["table_name"] == "missing_table"
 
