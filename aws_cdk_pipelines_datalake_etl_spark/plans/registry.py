@@ -10649,6 +10649,8 @@ QUERIES: list[tuple[QueryFn, str | None]] = [
     (sample_temperature_mix, SAMPLE_TEMPERATURE_ORACLE),
     (sample_temperature_mix_t3, SAMPLE_TEMPERATURE_T3_ORACLE),
     (dedup_semantic_survivors, DEDUP_SEMANTIC_ORACLE),
+    # guard invariance: the skew guard must not change the result, so
+    # the oracle is IDENTICAL by design
     (dedup_semantic_skewguard, DEDUP_SEMANTIC_ORACLE),
     (sample_source_rebalance, SAMPLE_REBALANCE_ORACLE),
     (text_repetition_removal, TEXT_REPETITION_ORACLE),
