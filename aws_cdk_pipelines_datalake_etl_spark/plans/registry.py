@@ -10514,12 +10514,12 @@ FROM mix m JOIN tot t USING (source)
 
 # One row per query: (function, DuckDB oracle SQL or None).  A query's
 # registry name is its function's name, and this list's order is the
-# order of ``queries()``.  The driver's correctness gate hash-checks
-# only the first 50 rows, so the head of the list is the driver window.
+# order of ``queries()``.  The external correctness gate hash-checks
+# only the first 50 rows, so the head of the list is its window.
 # Fill it in this priority order:
 #   1. the 3-entry reference-parity core, always;
 #   2. entries added or semantically changed since the last window;
-#   3. oracle-backed entries never driver-verified;
+#   3. oracle-backed entries that gate has never hash-verified;
 #   4. the rest oldest-verified-first (alphabetical within a round).
 # Only oracle-backed rows go in the window: a rows-only row can never
 # be hash-green, so rows-only ops keep their pytest gates (merge ==
@@ -10578,7 +10578,7 @@ QUERIES: list[tuple[QueryFn, str | None]] = [
     (sample_stratified, _sample_stratified_oracle()),
     (sim_brute_topk, SIM_BRUTE_TOPK_ORACLE),
     (sim_lsh_near_dup, SIM_NEAR_DUP_ORACLE),
-    # ---- end of the driver window: the rows above are the first 50 ----
+    # ---- end of the hash-checked window: the rows above are the first 50 ----
     (sim_random_projection, SIM_RANDOM_PROJECTION_ORACLE),
     (sketch_theta_audience, SKETCH_THETA_ORACLE),
     (source_jsonl_roundtrip, SOURCE_ORC_ORACLE),

@@ -8,7 +8,7 @@ columns to float64 before comparing — the local gate was *more lenient*
 than the driver.  These tests pin the strict behavior: the exact failure
 mode must now FAIL locally, and the repo-convention fix
 (``CAST(sum(...) AS BIGINT)``) must pass.  The last test pins the
-registry invariants the driver's 50-row window relies on.
+registry invariants the gate's 50-row window relies on.
 """
 
 from __future__ import annotations
@@ -73,10 +73,10 @@ def test_int_width_unification_still_tolerated():
     assert _gate(spark_side, oracle_side) == []
 
 
-def test_registry_rows_unique_and_driver_window_oracle_backed():
+def test_registry_rows_unique_and_first_50_rows_oracle_backed():
     """``build_registry`` is a dict over ``QUERIES`` keyed by function
     name, so a repeated row (or two functions with one name) would
-    collapse silently.  The driver hashes only the first 50 rows, and a
+    collapse silently.  The gate hashes only the first 50 rows, and a
     rows-only row can never be hash-green, so each of them needs an
     oracle.  No Spark session."""
     from aws_cdk_pipelines_datalake_etl_spark.plans.registry import (
@@ -89,4 +89,4 @@ def test_registry_rows_unique_and_driver_window_oracle_backed():
     assert not repeated, f"functions listed twice in QUERIES: {repeated}"
     assert len(build_registry()) == len(QUERIES)
     unbacked = [fn.__name__ for fn, oracle in QUERIES[:50] if not oracle]
-    assert not unbacked, f"driver-window rows without an oracle: {unbacked}"
+    assert not unbacked, f"first-50 rows without an oracle: {unbacked}"
