@@ -1049,8 +1049,8 @@ def block_unit_dedup(
     ``(doc, idx)`` pairs and each doc's surviving text is re-sliced
     from its OWN staged words column after the doc-keyed join, so
     both shuffles move a 16-byte key + two ints instead of shipping
-    the strings twice (measured: scripts/probe_shuffle_bytes.py,
-    SCALE.md).  Property test asserts the two forms are
+    the strings twice (measured: bench.py's per-slot shuffle write
+    bytes, SCALE.md).  Property test asserts the two forms are
     output-identical.  Everything is unit-proportional; no
     quadratic path."""
     if block_words < 1:

@@ -182,10 +182,10 @@ def transform(
     conformed_root: str,
     purposebuilt_root: str,
     transforms_dir: str | Path | None = None,
-    target_database: str | None = None,
 ) -> TransformResult:
     """Run the purpose-built job for one conformed table
-    (parity: etl_conformed_to_purposebuilt.py:180-212 ``main``).
+    (parity: etl_conformed_to_purposebuilt.py:180-212 ``main``) into
+    the ``<source_system>_purposebuilt`` database.
 
     The table upsert runs before the write, the reference's own order;
     whether it left the table in place decides, with the plan check,
@@ -197,7 +197,7 @@ def transform(
     sql_text = load_transform_sql(params.table_name, transforms_dir)
     df = run_sql(spark, sql_text)
 
-    database = target_database or params.target_database_name
+    database = f"{params.source_system_name}_purposebuilt"
     location = f"{purposebuilt_root.rstrip('/')}/{params.table_name}"
     sql_hash = {SQL_HASH_PROPERTY: hashlib.sha256(sql_text.encode()).hexdigest()}
     kept = catalog.upsert_table(

@@ -215,7 +215,6 @@ class PipelineRunner:
                     self.layout.conformed,
                     self.layout.purposebuilt,
                     transforms_dir=self.transforms_dir,
-                    target_database=f"{params.source_system_name}_purposebuilt",
                 )
                 purposebuilt_rows = built.n_rows  # observed during the write
             except TransformNotFoundError:

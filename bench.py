@@ -1,24 +1,41 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+Usage: python bench.py [query ...]   (default: the HEADLINE queries)
+
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+and writes BENCH_DETAIL_last.json next to this file, with one record
+per slot under ``slots`` (see :func:`measure`).
 
 Each query is fully materialized with the noop sink (count() would let
-column pruning skip projection work).
+column pruning skip projection work).  The session set-up, the warm-up
+and :func:`measure` are also what scripts/gen_bench_scale.py times
+with.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+import uuid
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+
+from py4j.protocol import Py4JJavaError
 
 from aws_cdk_pipelines_datalake_etl_spark.plans.registry import build_registry
 from aws_cdk_pipelines_datalake_etl_spark.session import get_spark
+from aws_cdk_pipelines_datalake_etl_spark.sources.testdata import (
+    TESTDATA_TABLES,
+    load_table,
+)
+
+JOB_GROUP = "spark.jobGroup.id"
 
 # Host-drift calibration (VERDICT r5 #4): a fixed, sf-independent,
 # pure-codegen workload whose cost depends only on the host (CPU +
@@ -131,45 +148,143 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def start_session(app_name: str = "bench"):
+    """The bench session: local[$SPARK_GRAFT_CPUS], one shuffle
+    partition per core."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     spark = get_spark(
-        app_name="bench",
+        app_name=app_name,
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
-    registry = build_registry()
+    return spark
 
-    # Warmup: touch every input table once (parquet footers + OS page
-    # cache + JVM/codegen warm) so timings measure query work, not
-    # first-touch I/O — the steady state a resident cluster runs in.
-    from aws_cdk_pipelines_datalake_etl_spark.sources.testdata import (
-        TESTDATA_TABLES,
-        load_table,
-    )
 
-    for t in TESTDATA_TABLES:
-        try:
-            load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-        except Exception:  # noqa: BLE001 — table absent at this sf
-            pass
+def warm(spark, registry, names, sf_dirs) -> None:
+    """Touch every input table at each of ``sf_dirs`` once (parquet
+    footers + OS page cache + JVM/codegen warm) so timings measure
+    query work, not first-touch I/O — the steady state a resident
+    cluster runs in.
 
-    # JIT warmup: run every headline query once at the smallest SF so
-    # whole-stage-codegen compilation (Janino) happens outside the timed
-    # loop — the minhash signature pass alone costs ~9 s of one-time
-    # compile, and the generated-code cache is keyed on source text, so
-    # a tiny-SF run warms the exact same plans the timed run uses.
+    Then run every named query once at the smallest SF so
+    whole-stage-codegen compilation (Janino) happens outside the timed
+    loop — the minhash signature pass alone costs ~9 s of one-time
+    compile, and the generated-code cache is keyed on source text, so
+    a tiny-SF run warms the exact same plans the timed run uses."""
+    for d in sf_dirs:
+        for t in TESTDATA_TABLES:
+            try:
+                load_table(spark, d, t).write.format("noop").mode("overwrite").save()
+            except Exception:  # noqa: BLE001 — table absent at this sf
+                pass
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001")
-    if os.path.isdir(warm_dir) and os.path.realpath(warm_dir) != os.path.realpath(sf_dir):
-        for name in HEADLINE:
+    timed = {os.path.realpath(d) for d in sf_dirs}
+    if os.path.isdir(warm_dir) and os.path.realpath(warm_dir) not in timed:
+        for name in names:
             try:
                 registry[name].fn(spark, warm_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
             except Exception:  # noqa: BLE001 — keep bench robust
                 pass
+
+
+def _shuffle_counters(spark, group: str) -> dict[str, int]:
+    """Shuffle writes and stage count of the jobs run under job group
+    ``group``, read from Spark's in-process status store (kept with the
+    UI off) once the listener bus has delivered every event.  A stage
+    that several jobs share (an adaptive query stage) counts once."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    stage_ids = set()
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        ids = store.job(job_id).stageIds()
+        stage_ids.update(ids.apply(i) for i in range(ids.size()))
+    out = {"shuffle_write_bytes": 0, "shuffle_write_records": 0, "stages": 0}
+    for stage_id in stage_ids:
+        try:
+            st = store.lastStageAttempt(stage_id)
+        except Py4JJavaError:  # stage skipped, or evicted from the store
+            continue
+        out["shuffle_write_bytes"] += st.shuffleWriteBytes()
+        out["shuffle_write_records"] += st.shuffleWriteRecords()
+        out["stages"] += 1
+    return out
+
+
+def _record(spark, passes: list[tuple]) -> dict:
+    walls = [wall for wall, _, _, _ in passes]
+    _, _, df, group = passes[-1]
+    t0 = time.time()
+    df._jdf.queryExecution().executedPlan()
+    return {
+        "wall_s": round(statistics.median(walls), 3),
+        "best_s": min(walls),
+        "build_s": round(statistics.median(b for _, b, _, _ in passes), 3),
+        "plan_s": round(time.time() - t0, 3),
+        **_shuffle_counters(spark, group),
+    }
+
+
+def measure(spark, fn, sf_dirs, reps: int = 3) -> list[dict]:
+    """Time query ``fn`` ``reps`` times at each of ``sf_dirs``, the
+    dirs interleaved within each rep (s,b,s,b,...) so session aging hits
+    every leg alike, and return one record per dir:
+
+    - ``wall_s`` / ``best_s``: median / best of the timed passes; a
+      pass runs from before ``fn()`` to after the noop ``save()``;
+    - ``build_s``: median time until ``fn()`` returned (Python
+      DataFrame construction plus any eager staging jobs);
+    - ``plan_s``: one untimed Catalyst optimization + physical planning
+      of the last pass's DataFrame, after the timed passes;
+    - ``shuffle_write_bytes`` / ``shuffle_write_records`` / ``stages``:
+      of the last pass, from the status store (each pass runs under a
+      job group of its own); ``stages`` counts the distinct stages of
+      the pass's jobs that the store holds an attempt of.
+
+    An exception from ``fn`` or the write propagates."""
+    sc = spark.sparkContext
+    passes: list[list[tuple]] = [[] for _ in sf_dirs]
+    try:
+        for _rep in range(reps):
+            for sf_dir, done in zip(sf_dirs, passes):
+                group = f"bench-{uuid.uuid4().hex}"
+                sc.setLocalProperty(JOB_GROUP, group)
+                t0 = time.time()
+                df = fn(spark, sf_dir)
+                built = time.time()
+                df.write.format("noop").mode("overwrite").save()
+                done.append((round(time.time() - t0, 3), built - t0, df, group))
+    finally:
+        sc.setLocalProperty(JOB_GROUP, None)
+    return [_record(spark, done) for done in passes]
+
+
+def measure_all(spark, registry, names, sf_dirs) -> tuple[dict, dict]:
+    """:func:`measure` for each named query: ``({name: records},
+    {name: error})``."""
+    runs: dict[str, list[dict]] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        try:
+            runs[name] = measure(spark, registry[name].fn, sf_dirs)
+        except Exception as exc:  # noqa: BLE001 — one bad query must
+            # not zero out the whole benchmark; record it and keep
+            # timing the rest (the error surfaces in the JSON line).
+            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+            print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
+    return runs, errors
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    names = sys.argv[1:] or HEADLINE
+    spark = start_session()
+    registry = build_registry()
+    warm(spark, registry, names, [sf_dir])
 
     # Calibration sample BEFORE the timed loop (and again after):
     # host noise fluctuates on minute timescales, so one end-of-run
@@ -184,29 +299,10 @@ def main() -> None:
     # medians damp that).  The best-of-3 is still emitted
     # (queries_best / value_best) so rounds 1-8, which reported best,
     # stay directly comparable; from round 9 on, compare medians.
-    import statistics
-
-    timings: dict[str, float] = {}
-    timings_best: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = registry[name].fn
-        got: list[float] = []
-        for _attempt in range(3):
-            t0 = time.time()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                got.append(round(time.time() - t0, 3))
-            except Exception as exc:  # noqa: BLE001 — one bad query must
-                # not zero out the whole benchmark; record it and keep
-                # timing the rest (the error surfaces in the JSON line).
-                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-                print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
-                break
-        if got:
-            timings[name] = round(statistics.median(got), 3)
-            timings_best[name] = min(got)
+    runs, errors = measure_all(spark, registry, names, [sf_dir])
+    slots = {name: rec for name, (rec,) in runs.items()}
+    timings = {n: r["wall_s"] for n, r in slots.items()}
+    timings_best = {n: r["best_s"] for n, r in slots.items()}
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
@@ -230,33 +326,25 @@ def main() -> None:
         "queries": timings,
         "sf": sf_val,
         "calibration_sec": cal,
+        "host_factor": round(cal / CALIBRATION_REF_SEC, 4),
+        "value_normalized": round(total * CALIBRATION_REF_SEC / cal, 3),
     }
-    if CALIBRATION_REF_SEC:
-        payload["host_factor"] = round(cal / CALIBRATION_REF_SEC, 4)
-        payload["value_normalized"] = round(
-            total * CALIBRATION_REF_SEC / cal, 3
-        )
     if errors:
         payload["errors"] = errors
-    detail = dict(payload)
-    detail.update(
-        {
-            "queries_best": timings_best,
-            "value_best": round(sum(timings_best.values()), 3),
-            "methodology": (
-                "per-query MEDIAN of 3 warm passes (primary, round 9+); "
-                "best-of-3 in queries_best/value_best for comparison "
-                "with rounds 1-8, which reported best"
-            ),
-            "calibration_samples": [cal_start, cal_end],
-        }
-    )
+    detail = {
+        **payload,
+        "queries_best": timings_best,
+        "value_best": round(sum(timings_best.values()), 3),
+        "methodology": (
+            "per-query MEDIAN of 3 warm passes (primary, round 9+); "
+            "best-of-3 in queries_best/value_best for comparison "
+            "with rounds 1-8, which reported best"
+        ),
+        "calibration_samples": [cal_start, cal_end],
+        "slots": slots,
+    }
     try:
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH_DETAIL_last.json",
-        )
-        with open(detail_path, "w") as f:
+        with open(os.path.join(HERE, "BENCH_DETAIL_last.json"), "w") as f:
             json.dump(detail, f, indent=1)
     except OSError as exc:  # read-only checkout: the line still prints
         print(f"BENCH DETAIL WRITE FAILED: {exc}", file=sys.stderr)

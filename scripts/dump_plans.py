@@ -16,9 +16,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from aws_cdk_pipelines_datalake_etl_spark.plans.explain import formatted_plan
-from aws_cdk_pipelines_datalake_etl_spark.plans.registry import build_registry
-from aws_cdk_pipelines_datalake_etl_spark.session import get_spark
+import bench  # noqa: E402
+from aws_cdk_pipelines_datalake_etl_spark.plans.explain import formatted_plan  # noqa: E402
+from aws_cdk_pipelines_datalake_etl_spark.plans.registry import build_registry  # noqa: E402
 
 
 def main() -> None:
@@ -30,21 +30,9 @@ def main() -> None:
         suffix = args[i + 1]
         args = args[:i] + args[i + 2 :]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = get_spark(
-        app_name="dump-plans",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.start_session("dump-plans")
     registry = build_registry()
-
-    if args == ["--all"]:
-        import bench
-
-        names = bench.HEADLINE
-    else:
-        names = args
+    names = bench.HEADLINE if args == ["--all"] else args
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)

@@ -1,120 +1,46 @@
-"""Assemble the BENCH_SCALE artifact: the full headline bench at
-sf0.1 AND at the 10x replica (.scale/sf1, built by
-scripts/gen_scale_data.py).
+"""Assemble the BENCH_SCALE artifact: the headline bench (or the named
+registry queries) at sf0.1 AND at the 10x replica (.scale/sf1, built
+by scripts/gen_scale_data.py), timed by bench.py's harness.
 
-Round 12 (VERDICT r11 #3): the PRIMARY methodology is per-query
-INTERLEAVED A/B in one session — each query's sf0.1 and sf1 passes
-alternate back-to-back (s,b,s,b,s,b), so session aging (GC pressure,
-page-cache state, JIT churn) hits both legs of a slot equally and the
-per-slot ratio is defensible per-plan.  The r04-r11 two-leg
-methodology (all queries at sf0.1, then all at sf1, separate bench.py
-processes) produced >2x phantom spread on its worst slots (r11:
-q07 11.63x in-artifact vs 4.05x isolated) because a slot's sf1 leg
-ran ~10 minutes of session drift after its sf0.1 leg; it is kept as
-the SECONDARY `one_session_legacy` block for cross-round continuity.
+Each query's sf0.1 and sf1 passes alternate back-to-back in one
+session (s,b,s,b,s,b), median of 3 per leg, so session aging (GC
+pressure, page-cache state, JIT churn) hits both legs of a slot
+equally and the per-slot ratio is defensible per-plan.  (Through r11
+the two legs ran as separate whole-bench passes; a slot's sf1 leg then
+ran ~10 minutes of session drift after its sf0.1 leg, which produced
+>2x phantom spread on the worst slots.)
 
-Usage: python scripts/gen_bench_scale.py [out.json]
+Usage: python scripts/gen_bench_scale.py [--out PATH] [query ...]
 Env: PROBE_BIG_DIR (default .scale/sf1), SPARK_GRAFT_SF_DIR
      (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
-     BENCH_SCALE_SKIP_LEGACY=1 to emit only the interleaved block.
+     SPARK_GRAFT_WARM_SF_DIR (the codegen warm-up scale factor).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import statistics
-import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
+from aws_cdk_pipelines_datalake_etl_spark.plans.registry import build_registry  # noqa: E402
 
-def run_bench(sf_dir: str) -> dict:
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        env=env, capture_output=True, text=True, check=True,
-    ).stdout.strip().splitlines()[-1]
-    return json.loads(out)
+SUMMARY = ("total_scaling", "max_query_scaling", "all_queries_sub_linear")
 
 
-def run_interleaved(small_dir: str, big_dir: str) -> dict:
-    from bench import HEADLINE
-
-    from aws_cdk_pipelines_datalake_etl_spark.plans.registry import (
-        build_registry,
-    )
-    from aws_cdk_pipelines_datalake_etl_spark.session import get_spark
-    from aws_cdk_pipelines_datalake_etl_spark.sources.testdata import (
-        TESTDATA_TABLES,
-        load_table,
-    )
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    spark = get_spark(
-        app_name="bench-scale-interleaved",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+def run_interleaved(names: list[str], small_dir: str, big_dir: str) -> dict:
+    spark = bench.start_session("bench-scale-interleaved")
     registry = build_registry()
-    for d in (small_dir, big_dir):
-        for t in TESTDATA_TABLES:
-            try:
-                load_table(spark, d, t).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:  # noqa: BLE001 — table absent at this sf
-                pass
-    warm_dir = os.environ.get(
-        "SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001"
-    )
-    if os.path.isdir(warm_dir):
-        for name in HEADLINE:
-            try:
-                registry[name].fn(spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:  # noqa: BLE001
-                pass
-    small: dict[str, float] = {}
-    big: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = registry[name].fn
-        ts: list[float] = []
-        tb: list[float] = []
-        try:
-            for _ in range(3):
-                t0 = time.time()
-                fn(spark, small_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                ts.append(time.time() - t0)
-                t0 = time.time()
-                fn(spark, big_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                tb.append(time.time() - t0)
-        except Exception as exc:  # noqa: BLE001 — keep the sweep alive
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-            print(f"SCALE ERROR {name}: {errors[name]}", file=sys.stderr)
-            continue
-        small[name] = round(statistics.median(ts), 3)
-        big[name] = round(statistics.median(tb), 3)
-        print(
-            f"# {name}: sf0.1 {small[name]}s  sf1 {big[name]}s  "
-            f"ratio {round(big[name] / small[name], 2)}x",
-            file=sys.stderr,
-            flush=True,
-        )
+    bench.warm(spark, registry, names, [small_dir, big_dir])
+    runs, errors = bench.measure_all(spark, registry, names, [small_dir, big_dir])
+    small = {name: s["wall_s"] for name, (s, _) in runs.items()}
+    big = {name: b["wall_s"] for name, (_, b) in runs.items()}
     spark.stop()
-    ratios = {
-        q: round(big[q] / small[q], 2) for q in small if small[q] > 0
-    }
+    ratios = {q: round(big[q] / small[q], 2) for q in small if small[q] > 0}
     doc = {
         "sf0.1_queries": small,
         "sf1_queries": big,
@@ -131,58 +57,30 @@ def run_interleaved(small_dir: str, big_dir: str) -> dict:
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        REPO, "BENCH_SCALE.json"
-    )
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*", help="default: bench.HEADLINE")
+    ap.add_argument("--out", default=os.path.join(REPO, "BENCH_SCALE.json"))
+    args = ap.parse_args()
     small_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    big_dir = os.environ.get(
-        "PROBE_BIG_DIR", os.path.join(REPO, ".scale/sf1")
-    )
-    inter = run_interleaved(small_dir, big_dir)
+    big_dir = os.environ.get("PROBE_BIG_DIR", os.path.join(REPO, ".scale/sf1"))
+    inter = run_interleaved(args.queries or bench.HEADLINE, small_dir, big_dir)
     doc = {
         "metric": "headline_queries_scaling_10x",
         "unit": "sec",
         "method": (
             "10x shape-preserving replication of sf0.1 into disjoint key "
             "shards (scripts/gen_scale_data.py; docs shingle-salted per "
-            "copy, embeddings perturbed). PRIMARY (r12+): per-query "
-            "interleaved A/B in one session — each slot's sf0.1/sf1 "
+            "copy, embeddings perturbed). Per-query interleaved A/B in "
+            "one session (bench.py's harness) — each slot's sf0.1/sf1 "
             "passes alternate back-to-back, median of 3 per leg, so "
-            "session aging cancels in the ratio. SECONDARY "
-            "one_session_legacy: the r04-r11 two-leg bench.py "
-            "methodology, kept for cross-round continuity."
+            "session aging cancels in the ratio."
         ),
         "interleaved": inter,
-        "total_scaling": inter["total_scaling"],
-        "max_query_scaling": inter["max_query_scaling"],
-        "all_queries_sub_linear": inter["all_queries_sub_linear"],
+        **{k: inter[k] for k in SUMMARY},
     }
-    if not os.environ.get("BENCH_SCALE_SKIP_LEGACY"):
-        small = run_bench(small_dir)
-        big = run_bench(big_dir)
-        ratios = {
-            q: round(big["queries"][q] / small["queries"][q], 2)
-            for q in small["queries"]
-            if q in big["queries"] and small["queries"][q]
-        }
-        doc["one_session_legacy"] = {
-            "sf0.1": small,
-            "sf1": big,
-            "scaling_factor_10x_data": ratios,
-            "total_scaling": round(big["value"] / small["value"], 2),
-            "max_query_scaling": max(ratios.values()),
-        }
-    with open(out_path, "w") as f:
+    with open(args.out, "w") as f:
         json.dump(doc, f, indent=1)
-    print(
-        json.dumps(
-            {
-                "total_scaling": doc["total_scaling"],
-                "max_query_scaling": doc["max_query_scaling"],
-                "out": out_path,
-            }
-        )
-    )
+    print(json.dumps({k: doc[k] for k in SUMMARY[:2]} | {"out": args.out}))
 
 
 if __name__ == "__main__":

@@ -13,13 +13,14 @@ import io
 import os
 import re
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import scripts.oracle_check as oc  # noqa: E402
 
 LINE = re.compile(
-    r"^(ok|skip|FAIL)\s+(\S+?):\s+(.*?)\s*(?:\[(\d+\.\d)s\])?$"
+    r"^(ok|skip|FAIL)\s+(\S+?):\s+(.*?)\s*(?:\[\d+\.\ds\])?$"
 )
 
 
@@ -33,21 +34,21 @@ def main() -> int:
             sys.__stdout__.write(s)
             return len(s)
 
+    t0 = time.time()
     with contextlib.redirect_stdout(Tee()):
         rc = oc.main(argv=[])
+    sweep_s = time.time() - t0
 
     rows, n_ok, n_skip, n_fail = [], 0, 0, 0
     for raw in buf.getvalue().splitlines():
         m = LINE.match(raw.strip())
         if not m:
             continue
-        status, name, detail, sec = m.groups()
+        status, name, detail = m.groups()
         n_ok += status == "ok"
         n_skip += status == "skip"
         n_fail += status == "FAIL"
-        rows.append(
-            f"| {name} | {status} | {detail} | {sec or ''} |"
-        )
+        rows.append(f"| {name} | {status} | {detail} |")
 
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -67,8 +68,9 @@ def main() -> int:
             f"{('Run: ' + note + chr(10)) if note else ''}"
             f"Totals: {n_ok} exact hash-matches, {n_skip} rows-only "
             "(approximate operators whose\nexact output is not "
-            f"SQL-expressible), {n_fail} failures.\n\n"
-            "| query | result | detail | sec |\n|---|---|---|---|\n"
+            f"SQL-expressible), {n_fail} failures.\n"
+            f"Sweep time: {sweep_s:.0f} s on {os.cpu_count()} CPUs.\n\n"
+            "| query | result | detail |\n|---|---|---|\n"
         )
         f.write("\n".join(rows) + "\n")
     print(f"wrote {out}: {n_ok} ok / {n_skip} rows-only / {n_fail} fail")

@@ -1,5 +1,6 @@
-"""Regenerate QUERIES.md from the registry — one row per query:
-name, oracle status, and the first docstring sentence.
+"""Regenerate QUERIES.md from the registry — one row per query, in
+``QUERIES`` order: name, oracle status, and the first docstring
+sentence.
 
 Usage: python scripts/gen_queries_md.py
 """
@@ -11,6 +12,12 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# The correctness gate hash-checks the first 50 rows of ``QUERIES``; one
+# row marks the cut, as a comment does in plans/registry.py.  Rows carry no
+# numbers, so moving a row changes two lines of the file, not all of
+# them.
+CUT_ROW = "| **end of the hash-checked window** | | the rows above are the first 50 |"
 
 
 def first_sentence(doc: str | None) -> str:
@@ -50,13 +57,15 @@ def main() -> None:
         f"{len(reg)} queries, "
         f"{sum(1 for v in reg.values() if v.oracle)} oracle-checked.",
         "",
-        "| # | query | check | what it is |",
-        "|---|---|---|---|",
+        "| query | check | what it is |",
+        "|---|---|---|",
     ]
-    for i, (name, spec) in enumerate(reg.items(), 1):
+    for i, (name, spec) in enumerate(reg.items()):
+        if i == 50:
+            lines.append(CUT_ROW)
         check = "oracle" if spec.oracle else "rows-only"
         desc = first_sentence(spec.fn.__doc__).replace("|", "\\|")
-        lines.append(f"| {i} | `{name}` | {check} | {desc} |")
+        lines.append(f"| `{name}` | {check} | {desc} |")
     out = os.path.join(os.path.dirname(os.path.dirname(__file__)), "QUERIES.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")

@@ -3,9 +3,10 @@ the driver's correctness window samples only the first 50 queries;
 this test keeps every out-of-window query under oracle coverage so a
 regression there cannot pass the round silently.
 
-Marked ``slow`` — it replays all ~130 registry queries against DuckDB
-at sf0.01 (the same comparison scripts/oracle_check.py prints; its
-per-query log is still the artifact committed as ORACLE_LOCAL.md).
+Marked ``slow`` — it runs every registry entry at sf0.01 and compares
+each one that has an oracle against DuckDB (the same comparison
+scripts/oracle_check.py prints; its per-query log is still the
+artifact committed as ORACLE_LOCAL.md).
 """
 
 from __future__ import annotations
