@@ -283,15 +283,6 @@ def train_bpe_with_vocab(
     return merges, build_vocab(rows, merges, specials)
 
 
-def bpe_vocab_table(spark, vocab: dict[str, int]) -> DataFrame:
-    """The vocabulary as a (token, token_id) DataFrame — the lookup
-    artifact a downstream detokenizer or analysis query joins on."""
-    return spark.createDataFrame(
-        sorted(vocab.items(), key=lambda kv: kv[1]),
-        "token string, token_id int",
-    )
-
-
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],

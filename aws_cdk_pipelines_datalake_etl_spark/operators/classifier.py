@@ -164,44 +164,6 @@ def train_quality_classifier(
     return w
 
 
-def hashed_features_portable(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dim: int = 1024,
-) -> DataFrame:
-    """Portable-hash twin of :func:`hashed_features`: ``slot =
-    hash48(token) % dim`` (md5-based — DuckDB-replayable, the
-    ``text_pack_sequences`` device) instead of xxhash64, single-space
-    tokens with empties dropped (mirrors ``list_filter(string_split(
-    lower(text), ' '), w -> w != '')``).  Same output shape
-    ``(_id, slot, k)`` + one bias row (slot -1, k 1) per doc.  Use
-    for oracle-backed entries; production paths keep the faster
-    xxhash64 variant."""
-    from aws_cdk_pipelines_datalake_etl_spark.functions.text_fn import (
-        hash48,
-        tokens,
-    )
-
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.filter(tokens(text_col), lambda w: w != "")).alias(
-            "tok"
-        ),
-    )
-    feats = (
-        toks.select("_id", F.pmod(hash48(F.col("tok")), F.lit(dim)).alias("slot"))
-        .groupBy("_id", "slot")
-        .agg(F.count(F.lit(1)).alias("k"))
-    )
-    bias = df.select(
-        F.col(id_col).alias("_id"),
-        F.lit(_BIAS).cast("bigint").alias("slot"),
-        F.lit(1).cast("bigint").alias("k"),
-    )
-    return feats.unionByName(bias)
-
-
 def train_one_step_micro(
     df: DataFrame,
     label_col: str,

@@ -15,8 +15,10 @@ real path on real bytes and the injectable seam).
 
 At 100 TB: binaries ride in parquet as-is (no re-encoding), metadata
 extraction is a narrow map, and ``mapInPandas`` processes each file
-split as Arrow batches — per-executor memory is bounded by
-``maxRecordsPerBatch``, not file size.
+split as Arrow batches, each walked in fixed row chunks (one output
+frame per chunk) — per-executor output memory is bounded by the
+chunk size, not file size.  Building an operator never changes the
+session's configuration.
 """
 
 from __future__ import annotations
@@ -76,6 +78,18 @@ def attach_binary_column(
     )
 
 
+_BATCH_ROWS = 64
+_VIDEO_BATCH_ROWS = 16  # each row fans out to a frame per sample
+
+
+def _chunks(batches: Iterator[pd.DataFrame], rows: int) -> Iterator[pd.DataFrame]:
+    """Every Arrow batch in slices of at most ``rows`` rows, each with a
+    fresh 0-based index (so positional columns align with it)."""
+    for pdf in batches:
+        for i in range(0, len(pdf), rows):
+            yield pdf.iloc[i : i + rows].reset_index(drop=True)
+
+
 def _default_decoder(payload: bytes) -> dict:
     """Real decode for PPM/PGM/BMP bytes; NotImplementedError for
     formats needing external codec libraries (PNG/JPEG)."""
@@ -89,7 +103,6 @@ def decode_image_batch(
     blob_col: str = "blob",
     id_col: str = "doc_id",
     decoder: Callable[[bytes], dict] | None = None,
-    batch_size: int = 64,
 ) -> DataFrame:
     """Feature-extract image blobs via ``mapInPandas``.
 
@@ -99,11 +112,9 @@ def decode_image_batch(
     formats needing external libs; inject ``decoder=`` for those.
     """
     dec = decoder or _default_decoder
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in _chunks(batches, _BATCH_ROWS):
             feats = [dec(p) for p in pdf[blob_col]]
             out = pd.DataFrame(
                 {
@@ -136,7 +147,6 @@ def resize_image_batch(
     blob_col: str = "blob",
     id_col: str = "doc_id",
     resizer: Callable[[bytes, int, int], bytes] | None = None,
-    batch_size: int = 64,
 ) -> DataFrame:
     """Resize image blobs via ``mapInPandas`` — binary in, binary out
     through Arrow.  ``resizer(payload, w, h) -> bytes``; the default
@@ -153,11 +163,9 @@ def resize_image_batch(
         return resize_image(bytes(payload), w, h)
 
     rs = resizer or _default_resizer
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in _chunks(batches, _BATCH_ROWS):
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].astype("int64"),
@@ -189,7 +197,6 @@ def decode_audio_batch(
     blob_col: str = "blob",
     id_col: str = "doc_id",
     decoder: Callable[[bytes], dict] | None = None,
-    batch_size: int = 64,
 ) -> DataFrame:
     """Feature-extract audio blobs via ``mapInPandas`` — the audio
     analogue of :func:`decode_image_batch`.
@@ -210,11 +217,9 @@ def decode_audio_batch(
         return audio_features(bytes(payload))
 
     dec = decoder or _default
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in _chunks(batches, _BATCH_ROWS):
             feats = [dec(p) for p in pdf[blob_col]]
             yield pd.DataFrame(
                 {
@@ -261,7 +266,6 @@ def sample_video_frames(
     blob_col: str = "blob",
     id_col: str = "doc_id",
     sampler: Callable[[bytes, int], list[bytes]] | None = None,
-    batch_size: int = 16,
 ) -> DataFrame:
     """Frame-sample video blobs via ``mapInPandas`` — the 1→N fan-out
     batch shape (one input row yields a row per sampled frame).
@@ -270,9 +274,9 @@ def sample_video_frames(
     (:func:`..functions.imagecodec.split_ppm_stream`) and raises
     NotImplementedError for real containers (MP4/WebM — no ffmpeg
     here; inject a sampler).  At scale the fan-out happens inside each
-    Arrow batch, so executor memory is bounded by
-    ``batch_size * frames_per_video``, and the output inherits the
-    input partitioning (no shuffle)."""
+    chunk of ``_VIDEO_BATCH_ROWS`` input rows, so executor memory is
+    bounded by ``_VIDEO_BATCH_ROWS * frames_per_video``, and the
+    output inherits the input partitioning (no shuffle)."""
 
     def _default(payload: bytes, n: int) -> list[bytes]:
         from aws_cdk_pipelines_datalake_etl_spark.functions.imagecodec import (
@@ -282,11 +286,9 @@ def sample_video_frames(
         return sample_ppm_stream(bytes(payload), n)
 
     sp = sampler or _default
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in _chunks(batches, _VIDEO_BATCH_ROWS):
             ids: list[int] = []
             idxs: list[int] = []
             frames: list[bytes] = []
@@ -319,7 +321,6 @@ def extract_embedding_batch(
     extractor: Callable[[bytes], list] | None = None,
     blob_col: str = "blob",
     id_col: str = "doc_id",
-    batch_size: int = 64,
 ) -> DataFrame:
     """Feature-extract binary payloads into a fixed-size embedding
     column (``array<float>``) via ``mapInPandas`` — the bridge from
@@ -344,11 +345,9 @@ def extract_embedding_batch(
         ).astype("float32")
 
     ext = extractor or _default
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in _chunks(batches, _BATCH_ROWS):
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].astype("int64"),

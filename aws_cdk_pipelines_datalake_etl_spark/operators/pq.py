@@ -40,32 +40,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from aws_cdk_pipelines_datalake_etl_spark.functions.vector import as_double_array
+from aws_cdk_pipelines_datalake_etl_spark.functions.vector import (
+    as_double_array,
+    literal_adc,
+    literal_structs,
+    nearest_codes,
+    unit_vectors,
+)
 
 
-def _normalized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    v = as_double_array(vec_col)
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    return (
-        df.select(F.col(id_col).alias("id"), F.transform(v, lambda x: x / nrm).alias("nv"))
-        .filter(nrm > 0)
+def _train_sample(vectors, m, seed, max_train, id_col, vec_col):
+    """The deterministic hash-ordered training sample — at most
+    ``max_train`` normalized vectors — as a driver-side matrix."""
+    import numpy as np
+
+    sample = (
+        unit_vectors(vectors, id_col, vec_col)
+        .withColumn("h", F.xxhash64(F.col("id"), F.lit(seed)))
+        .orderBy("h", "id")
+        .limit(max_train)
+        .select("nv")
+        .collect()
     )
-
-
-def _sub_sqdist(vec_col: str, j: int, dsub: int, centroid: list[float]):
-    """Codegen'd squared L2 between subvector j of ``vec_col`` and a
-    literal centroid: a flat sum of (x[i] - c_i)^2 scalar terms."""
-    terms = None
-    for i, c in enumerate(centroid):
-        d = F.element_at(vec_col, j * dsub + i + 1) - F.lit(float(c))
-        t = d * d
-        terms = t if terms is None else terms + t
-    return terms
-
-
-def _nearest_sub(vec_col: str, j: int, dsub: int, centroids: list[list[float]]):
-    dists = F.array(*[_sub_sqdist(vec_col, j, dsub, c) for c in centroids])
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    if not sample:
+        raise ValueError("PQ training: no non-zero vectors")
+    X = np.array([r["nv"] for r in sample], dtype=np.float64)
+    if X.shape[1] % m:
+        raise ValueError(f"dim {X.shape[1]} not divisible by m={m}")
+    return X
 
 
 def train_pq_codebooks(
@@ -92,24 +94,7 @@ def train_pq_codebooks(
     the collect a control-sized transfer (max_train * dim doubles),
     and hash-ordering makes it reproducible on any partitioning.
     """
-    import numpy as np
-
-    sample = (
-        _normalized(vectors, id_col, vec_col)
-        .withColumn("h", F.xxhash64(F.col("id"), F.lit(seed)))
-        .orderBy("h", "id")
-        .limit(max_train)
-        .select("nv")
-        .collect()
-    )
-    if not sample:
-        raise ValueError("train_pq_codebooks: no non-zero vectors")
-    X = np.array([r["nv"] for r in sample], dtype=np.float64)
-    dim = X.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-
+    X = _train_sample(vectors, m, seed, max_train, id_col, vec_col)
     return _fit_subquantizers(X, m, ksub, max_iter, seed)
 
 
@@ -152,29 +137,18 @@ def pq_encode(
     """``(vec_id, codes array<int>)`` — each vector reduced to m
     sub-codes (~m bytes at scale; ~32× smaller than float32).  One
     narrow codegen'd projection, zero shuffles."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    nv = _normalized(vectors, id_col, vec_col)
-    codes = F.array(*[_nearest_sub("nv", j, dsub, codebooks[j]) for j in range(m)])
-    return nv.select(F.col("id").alias(id_col), codes.alias("codes"))
+    return unit_vectors(vectors, id_col, vec_col).select(
+        F.col("id").alias(id_col), nearest_codes("nv", codebooks).alias("codes")
+    )
 
 
 def _codebook_entry_lit(codebooks: list[list[list[float]]]):
     """The full codebook as ONE literal array of (j, code, cent)
     structs — m*ksub*dsub doubles, a model artifact, constant in both
     corpus and query-batch size."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                F.lit(c).alias("code"),
-                F.array(*[F.lit(float(x)) for x in codebooks[j][c]]).alias(
-                    "cent"
-                ),
-            )
-            for j in range(len(codebooks))
-            for c in range(len(codebooks[j]))
-        ]
+    return literal_structs(
+        ["j", "code", "cent"],
+        [(j, c, cent) for j, book in enumerate(codebooks) for c, cent in enumerate(book)],
     )
 
 
@@ -193,7 +167,7 @@ def _query_distance_tables(
     magnitude).  Terms sum in subspace order, matching the numpy
     literal path bit-for-bit on the same doubles."""
     dsub = len(codebooks[0][0])
-    nv = _normalized(queries, id_col, vec_col)
+    nv = unit_vectors(queries, id_col, vec_col)
     e = nv.select(
         F.col("id").alias("query_id"),
         "nv",
@@ -237,8 +211,13 @@ def _adc_join_topk(
         .agg(F.round(F.sum("pd"), 6).alias("adc_dist"))
         .filter(F.col("query_id") != F.col(id_col))
     )
+    return _topk(agg, k, id_col)
+
+
+def _topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Per-query top-k by ``adc_dist``, ties by id: adds ``rank``."""
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc(id_col))
-    return agg.withColumn("rank", F.row_number().over(w)).filter(
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
 
@@ -279,6 +258,66 @@ def _seq_sq_sum(diffs) -> float:
     return acc
 
 
+def _adc_table(v, codebooks) -> list[list[float]]:
+    """One query's ``m x ksub`` partial-distance table, 9 dp."""
+    import numpy as np
+
+    dsub = len(codebooks[0][0])
+    return [
+        [
+            float(np.round(_seq_sq_sum(v[j * dsub : (j + 1) * dsub] - np.array(c)), 9))
+            for c in book
+        ]
+        for j, book in enumerate(codebooks)
+    ]
+
+
+def _literal_adc_topk(
+    codes: DataFrame,
+    codebooks: list[list[list[float]]],
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    centroids: dict[int, list[float]] | None = None,
+    nprobe: int = 0,
+    residual: bool = False,
+) -> DataFrame:
+    """The ``tables="literal"`` ADC top-k shared by the PQ and IVF+PQ
+    ops: each collected query's numpy distance table(s) are inlined as
+    plan literals (:func:`..functions.vector.literal_adc`), so one scan
+    of ``codes`` serves every query.  With ``centroids`` a query only
+    scores rows of its ``nprobe`` max-dot buckets (stable argsort, the
+    broadcast path's tie rule): one table gated to all of them, or with
+    ``residual`` one table per bucket, for the query's residual there.
+    Returns ``(query_id, id_col, adc_dist, rank)``."""
+    import numpy as np
+
+    q_rows = unit_vectors(queries, id_col, vec_col).orderBy("id").collect()
+    C = None
+    if centroids is not None:
+        C = np.array([centroids[b] for b in sorted(centroids)], dtype=np.float64)
+    batch = []
+    for qr in q_rows:
+        qv = np.array(qr["nv"], dtype=np.float64)
+        if C is None:
+            arms = [(None, _adc_table(qv, codebooks))]
+        else:
+            probed = [int(b) for b in np.argsort(-(C @ qv), kind="stable")[:nprobe]]
+            arms = (
+                [([b], _adc_table(qv - C[b], codebooks)) for b in probed]
+                if residual
+                else [(probed, _adc_table(qv, codebooks))]
+            )
+        batch.append((qr["id"], arms))
+    scored = codes.select(
+        F.col(id_col), F.explode(literal_adc(batch)).alias("qd")
+    ).select("qd.query_id", id_col, "qd.adc_dist")
+    if C is not None:
+        scored = scored.filter(F.col("adc_dist").isNotNull())
+    return _topk(scored.filter(F.col("query_id") != F.col(id_col)), k, id_col)
+
+
 def pq_adc_topk(
     codes: DataFrame,
     codebooks: list[list[list[float]]],
@@ -315,56 +354,7 @@ def pq_adc_topk(
         dtab = _query_distance_tables(queries, codebooks, id_col, vec_col)
         return _adc_join_topk(codes, dtab, k, id_col, ["j", "code"])
 
-    import numpy as np
-
-    m = len(codebooks)
-    ksub = len(codebooks[0])
-    dsub = len(codebooks[0][0])
-    q_rows = _normalized(queries, id_col, vec_col).orderBy("id").collect()
-
-    per_query = []
-    for qr in q_rows:
-        qv = np.array(qr["nv"], dtype=np.float64)
-        tbl = [
-            [
-                float(
-                    np.round(
-                        _seq_sq_sum(
-                            qv[j * dsub : (j + 1) * dsub]
-                            - np.array(codebooks[j][c])
-                        ),
-                        9,
-                    )
-                )
-                for c in range(ksub)
-            ]
-            for j in range(m)
-        ]
-        dist = None
-        for j in range(m):
-            t = F.element_at(
-                F.array(*[F.lit(x) for x in tbl[j]]),
-                F.element_at("codes", j + 1) + 1,
-            )
-            dist = t if dist is None else dist + t
-        per_query.append(
-            F.struct(
-                F.lit(int(qr["id"])).alias("query_id"),
-                F.round(dist, 6).alias("adc_dist"),
-            )
-        )
-
-    exploded = codes.select(
-        F.col(id_col), F.explode(F.array(*per_query)).alias("qd")
-    ).select("qd.query_id", id_col, "qd.adc_dist")
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc(id_col)
-    )
-    return (
-        exploded.filter(F.col("query_id") != F.col(id_col))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _literal_adc_topk(codes, codebooks, queries, k, id_col, vec_col)
 
 
 def _exact_rerank(
@@ -414,16 +404,8 @@ def _probe_pairs_df(
     nearest coarse buckets, computed distributed (coarse centroids are
     a bounded literal; ties by sim desc then centroid_id, matching the
     literal path's stable argsort)."""
-    ents = F.array(
-        *[
-            F.struct(
-                F.lit(int(b)).alias("centroid_id"),
-                F.array(*[F.lit(float(x)) for x in cv]).alias("cvec"),
-            )
-            for b, cv in sorted(centroids.items())
-        ]
-    )
-    nv = _normalized(queries, id_col, vec_col)
+    ents = literal_structs(["centroid_id", "cvec"], sorted(centroids.items()))
+    nv = unit_vectors(queries, id_col, vec_col)
     e = nv.select(
         F.col("id").alias("query_id"), "nv", F.explode(ents).alias("e")
     )
@@ -473,7 +455,7 @@ def _query_distance_tables_residual(
         "query_id", "centroid_id", "cvec",
         F.explode(_codebook_entry_lit(codebooks)).alias("e"),
     ).join(
-        _normalized(queries, id_col, vec_col).select(
+        unit_vectors(queries, id_col, vec_col).select(
             F.col("id").alias("query_id"), "nv"
         ),
         "query_id",
@@ -495,7 +477,7 @@ def _query_distance_tables_residual(
     )
 
 
-def _ivfpq_cand_broadcast(
+def _ivfpq_cand(
     codes: DataFrame,
     centroids: dict[int, list[float]],
     codebooks: list[list[list[float]]],
@@ -505,28 +487,83 @@ def _ivfpq_cand_broadcast(
     id_col: str,
     vec_col: str,
     residual: bool,
+    tables: str = "broadcast",
+    broadcast_threshold: int = 16,
     probe: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Shared broadcast-table IVF(+residual) ADC shortlist:
-    ``(query_id, neighbor_id)`` candidates from a codes table carrying
-    ``centroid_id`` — used by the in-memory topk ops and the persisted
-    index probe alike.  ``probe`` optionally reuses an already-computed
-    :func:`_probe_pairs_df` result (one coarse-assignment job, not
-    two)."""
-    if probe is None:
-        probe = _probe_pairs_df(queries, centroids, nprobe, id_col, vec_col)
-    if residual:
-        dtab = _query_distance_tables_residual(
-            queries, centroids, codebooks, nprobe, id_col, vec_col,
-            probe=probe,
+    """Shared IVF(+residual) ADC shortlist: ``(query_id, neighbor_id)``
+    candidates from a codes table carrying ``centroid_id`` — used by
+    the in-memory topk ops and the persisted index probe alike.
+    ``tables`` picks the distance tables' form as in
+    :func:`pq_adc_topk`.  ``probe`` optionally reuses an
+    already-computed :func:`_probe_pairs_df` result (one
+    coarse-assignment job, not two)."""
+    if _resolve_tables(queries, tables, broadcast_threshold) == "literal":
+        cand = _literal_adc_topk(
+            codes, codebooks, queries, shortlist, id_col, vec_col,
+            centroids, nprobe, residual,
         )
     else:
-        dtab = _query_distance_tables(
-            queries, codebooks, id_col, vec_col
-        ).join(probe.select("query_id", "centroid_id"), "query_id")
-    return _adc_join_topk(
-        codes, dtab, shortlist, id_col, ["centroid_id", "j", "code"]
-    ).select("query_id", F.col(id_col).alias("neighbor_id"))
+        if probe is None:
+            probe = _probe_pairs_df(queries, centroids, nprobe, id_col, vec_col)
+        if residual:
+            dtab = _query_distance_tables_residual(
+                queries, centroids, codebooks, nprobe, id_col, vec_col,
+                probe=probe,
+            )
+        else:
+            dtab = _query_distance_tables(
+                queries, codebooks, id_col, vec_col
+            ).join(probe.select("query_id", "centroid_id"), "query_id")
+        cand = _adc_join_topk(
+            codes, dtab, shortlist, id_col, ["centroid_id", "j", "code"]
+        )
+    return cand.select("query_id", F.col(id_col).alias("neighbor_id"))
+
+
+def _ivfpq_model(
+    vectors: DataFrame,
+    coarse_k: int,
+    m: int,
+    ksub: int,
+    seed: int,
+    residual: bool,
+    id_col: str,
+    vec_col: str,
+    coarse: "DataFrame | None" = None,
+    codebooks: list[list[list[float]]] | None = None,
+):
+    """Coarse centroids (k-means||, unless ``coarse`` is given) -> PQ
+    codebooks (unless given; fitted on residuals with ``residual``) ->
+    the code table carrying ``centroid_id``.  Returns
+    ``(centroids, codebooks, codes)``."""
+    from aws_cdk_pipelines_datalake_etl_spark.operators.similarity import (
+        assign_ivf_buckets,
+        train_ivf_codebook,
+    )
+
+    if coarse is None:
+        coarse = train_ivf_codebook(
+            vectors, n_centroids=coarse_k, seed=seed, id_col=id_col, vec_col=vec_col
+        )
+    centroids = {
+        int(r["centroid_id"]): list(r["embedding"]) for r in coarse.collect()
+    }
+    kw = dict(m=m, ksub=ksub, seed=seed, id_col=id_col, vec_col=vec_col)
+    if codebooks is None and residual:
+        codebooks = train_pq_codebooks_residual(
+            vectors, [centroids[b] for b in sorted(centroids)], **kw
+        )
+    elif codebooks is None:
+        codebooks = train_pq_codebooks(vectors, **kw)
+    if residual:
+        codes = pq_encode_residual(vectors, coarse, codebooks, id_col, vec_col)
+        return centroids, codebooks, codes
+    bucketed = assign_ivf_buckets(
+        vectors, coarse, id_col=id_col, vec_col=vec_col
+    ).select(F.col(id_col), "centroid_id")
+    codes = pq_encode(vectors, codebooks, id_col, vec_col).join(bucketed, id_col)
+    return centroids, codebooks, codes
 
 
 def write_ivfpq_index(
@@ -554,42 +591,16 @@ def write_ivfpq_index(
     I/O stays constant-size per bucket as dimensionality grows."""
     import json
 
-    from aws_cdk_pipelines_datalake_etl_spark.operators.similarity import (
-        assign_ivf_buckets,
-        train_ivf_codebook,
+    centroids, books, codes = _ivfpq_model(
+        vectors, coarse_k, m, ksub, seed, residual, id_col, vec_col
     )
-
-    spark = vectors.sparkSession
-    coarse = train_ivf_codebook(
-        vectors, n_centroids=coarse_k, seed=seed, id_col=id_col, vec_col=vec_col
-    )
-    centroids = {
-        int(r["centroid_id"]): list(r["embedding"]) for r in coarse.collect()
-    }
-    if residual:
-        books = train_pq_codebooks_residual(
-            vectors,
-            [centroids[b] for b in sorted(centroids)],
-            m=m, ksub=ksub, seed=seed, id_col=id_col, vec_col=vec_col,
-        )
-        codes = pq_encode_residual(vectors, coarse, books, id_col, vec_col)
-    else:
-        books = train_pq_codebooks(
-            vectors, m=m, ksub=ksub, seed=seed, id_col=id_col, vec_col=vec_col
-        )
-        bucketed = assign_ivf_buckets(
-            vectors, coarse, id_col=id_col, vec_col=vec_col
-        ).select(F.col(id_col), "centroid_id")
-        codes = pq_encode(vectors, books, id_col, vec_col).join(
-            bucketed, id_col
-        )
     codes.write.mode("overwrite").partitionBy("centroid_id").parquet(
         f"{path}/codes"
     )
     meta = {"residual": residual, "centroids": centroids, "codebooks": books}
     # JSON round-trips python floats exactly (shortest-repr), so the
     # reloaded codebooks reproduce bit-identical ADC tables
-    spark.createDataFrame(
+    vectors.sparkSession.createDataFrame(
         [(json.dumps(meta, sort_keys=True),)], "value string"
     ).coalesce(1).write.mode("overwrite").text(f"{path}/meta")
     return meta
@@ -632,7 +643,7 @@ def ivfpq_topk_from_index(
     codes = spark.read.parquet(f"{path}/codes").filter(
         F.col("centroid_id").isin(buckets)
     )
-    cand = _ivfpq_cand_broadcast(
+    cand = _ivfpq_cand(
         codes, centroids, books, queries, nprobe, shortlist,
         id_col, vec_col, bool(meta["residual"]), probe=probe,
     )
@@ -702,94 +713,13 @@ def ivf_pq_topk(
     classic refinement when buckets are tight — same plumbing, one
     extra subtraction before encode.
     """
-    import numpy as np
-
-    from aws_cdk_pipelines_datalake_etl_spark.operators.similarity import (
-        assign_ivf_buckets,
-        train_ivf_codebook,
+    centroids, books, codes = _ivfpq_model(
+        vectors, coarse_k, m, ksub, seed, False, id_col, vec_col, coarse, codebooks
     )
-
-    if coarse is None:
-        coarse = train_ivf_codebook(
-            vectors, n_centroids=coarse_k, seed=seed, id_col=id_col, vec_col=vec_col
-        )
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            vectors, m=m, ksub=ksub, seed=seed, id_col=id_col, vec_col=vec_col
-        )
-    centroids = {
-        int(r["centroid_id"]): list(r["embedding"]) for r in coarse.collect()
-    }
-
-    bucketed = assign_ivf_buckets(
-        vectors, coarse, id_col=id_col, vec_col=vec_col
-    ).select(F.col(id_col), F.col("centroid_id"))
-    codes = pq_encode(vectors, codebooks, id_col, vec_col).join(bucketed, id_col)
-
-    tables = _resolve_tables(queries, tables, broadcast_threshold)
-    if tables == "broadcast":
-        # distance tables and probed buckets as broadcast DATA — plan
-        # size constant in the query-batch size (the 10^3+-query path)
-        cand = _ivfpq_cand_broadcast(
-            codes, centroids, codebooks, queries, nprobe, shortlist,
-            id_col, vec_col, residual=False,
-        )
-    else:
-        mm = len(codebooks)
-        ksub_n = len(codebooks[0])
-        dsub = len(codebooks[0][0])
-        q_rows = _normalized(queries, id_col, vec_col).orderBy("id").collect()
-        C = np.array([centroids[j] for j in sorted(centroids)], dtype=np.float64)
-
-        per_query = []
-        for qr in q_rows:
-            qv = np.array(qr["nv"], dtype=np.float64)
-            sims = C @ qv
-            probed = [int(j) for j in np.argsort(-sims, kind="stable")[:nprobe]]
-            tbl = [
-                [
-                    float(
-                        np.round(
-                            _seq_sq_sum(
-                                qv[j * dsub : (j + 1) * dsub]
-                                - np.array(codebooks[j][c])
-                            ),
-                            9,
-                        )
-                    )
-                    for c in range(ksub_n)
-                ]
-                for j in range(mm)
-            ]
-            dist = None
-            for j in range(mm):
-                t = F.element_at(
-                    F.array(*[F.lit(x) for x in tbl[j]]),
-                    F.element_at("codes", j + 1) + 1,
-                )
-                dist = t if dist is None else dist + t
-            gated = F.when(
-                F.col("centroid_id").isin(probed), F.round(dist, 6)
-            ).otherwise(F.lit(None))
-            per_query.append(
-                F.struct(
-                    F.lit(int(qr["id"])).alias("query_id"),
-                    gated.alias("adc_dist"),
-                )
-            )
-
-        exploded = (
-            codes.select(F.col(id_col), F.explode(F.array(*per_query)).alias("qd"))
-            .select("qd.query_id", id_col, "qd.adc_dist")
-            .filter(F.col("adc_dist").isNotNull())
-            .filter(F.col("query_id") != F.col(id_col))
-        )
-        wsl = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc(id_col))
-        cand = (
-            exploded.withColumn("r", F.row_number().over(wsl))
-            .filter(F.col("r") <= shortlist)
-            .select("query_id", F.col(id_col).alias("neighbor_id"))
-        )
+    cand = _ivfpq_cand(
+        codes, centroids, books, queries, nprobe, shortlist, id_col, vec_col,
+        False, tables, broadcast_threshold,
+    )
     return _exact_rerank(cand, vectors, queries, k, id_col, vec_col)
 
 
@@ -819,42 +749,11 @@ def train_pq_codebooks_residual(
     ``assign_ivf_buckets``), codebooks fitted on ``nv - centroid``."""
     import numpy as np
 
-    sample = (
-        _normalized(vectors, id_col, vec_col)
-        .withColumn("h", F.xxhash64(F.col("id"), F.lit(seed)))
-        .orderBy("h", "id")
-        .limit(max_train)
-        .select("nv")
-        .collect()
-    )
-    if not sample:
-        raise ValueError("train_pq_codebooks_residual: no non-zero vectors")
-    X = np.array([r["nv"] for r in sample], dtype=np.float64)
-    if X.shape[1] % m:
-        raise ValueError(f"dim {X.shape[1]} not divisible by m={m}")
+    X = _train_sample(vectors, m, seed, max_train, id_col, vec_col)
     C = np.array(coarse_centroids, dtype=np.float64)
     a = (X @ C.T).argmax(axis=1)  # first-index ties, like the engine
     R = X - C[a]
     return _fit_subquantizers(R, m, ksub, max_iter, seed)
-
-
-def _sub_sqdist_residual(
-    vec_col: str, cvec_col: str, j: int, dsub: int, centroid: list[float]
-):
-    """Codegen'd squared L2 between subvector j of the RESIDUAL
-    (vec - bucket centroid, both array columns) and a literal PQ
-    centroid — the subtraction stays scalar, no residual array is ever
-    materialized."""
-    terms = None
-    for i, c in enumerate(centroid):
-        d = (
-            F.element_at(vec_col, j * dsub + i + 1)
-            - F.element_at(cvec_col, j * dsub + i + 1)
-            - F.lit(float(c))
-        )
-        t = d * d
-        terms = t if terms is None else terms + t
-    return terms
 
 
 def pq_encode_residual(
@@ -871,9 +770,7 @@ def pq_encode_residual(
         assign_ivf_buckets,
     )
 
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    nv = _normalized(vectors, id_col, vec_col)
+    nv = unit_vectors(vectors, id_col, vec_col)
     assigned = assign_ivf_buckets(
         vectors, coarse, id_col=id_col, vec_col=vec_col
     ).select(F.col(id_col).alias("id"), "centroid_id")
@@ -884,19 +781,10 @@ def pq_encode_residual(
         nv.join(assigned, "id")
         .join(F.broadcast(cdim), "centroid_id")
     )
-
-    def nearest(j: int):
-        dists = F.array(
-            *[
-                _sub_sqdist_residual("nv", "cvec", j, dsub, c)
-                for c in codebooks[j]
-            ]
-        )
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    codes = F.array(*[nearest(j) for j in range(m)])
     return rows.select(
-        F.col("id").alias(id_col), "centroid_id", codes.alias("codes")
+        F.col("id").alias(id_col),
+        "centroid_id",
+        nearest_codes("nv", codebooks, minus="cvec").alias("codes"),
     )
 
 
@@ -926,91 +814,11 @@ def ivf_pq_topk_residual(
     ``"broadcast"`` materializes them as a broadcast DataFrame keyed by
     (query_id, centroid_id, j, code) so the plan stays constant-size
     for large query batches."""
-    import numpy as np
-
-    from aws_cdk_pipelines_datalake_etl_spark.operators.similarity import (
-        train_ivf_codebook,
+    centroids, books, codes = _ivfpq_model(
+        vectors, coarse_k, m, ksub, seed, True, id_col, vec_col
     )
-
-    coarse = train_ivf_codebook(
-        vectors, n_centroids=coarse_k, seed=seed, id_col=id_col, vec_col=vec_col
-    )
-    cent_rows = sorted(
-        ((int(r["centroid_id"]), list(r["embedding"])) for r in coarse.collect())
-    )
-    C = np.array([c for _, c in cent_rows], dtype=np.float64)
-    books = train_pq_codebooks_residual(
-        vectors, C.tolist(), m=m, ksub=ksub, seed=seed,
-        id_col=id_col, vec_col=vec_col,
-    )
-    codes = pq_encode_residual(vectors, coarse, books, id_col, vec_col)
-
-    tables = _resolve_tables(queries, tables, broadcast_threshold)
-    if tables == "broadcast":
-        centroids = {b: list(cv) for b, cv in cent_rows}
-        cand = _ivfpq_cand_broadcast(
-            codes, centroids, books, queries, nprobe, shortlist,
-            id_col, vec_col, residual=True,
-        )
-        return _exact_rerank(cand, vectors, queries, k, id_col, vec_col)
-
-    dsub = len(books[0][0])
-    ksub_n = len(books[0])
-    q_rows = _normalized(queries, id_col, vec_col).orderBy("id").collect()
-
-    per_query = []
-    for qr in q_rows:
-        qv = np.array(qr["nv"], dtype=np.float64)
-        sims = C @ qv
-        probed = [int(b) for b in np.argsort(-sims, kind="stable")[:nprobe]]
-        gated = None
-        for b in probed:
-            rq = qv - C[b]
-            tbl = [
-                [
-                    float(
-                        np.round(
-                            _seq_sq_sum(
-                                rq[j * dsub : (j + 1) * dsub]
-                                - np.array(books[j][c])
-                            ),
-                            9,
-                        )
-                    )
-                    for c in range(ksub_n)
-                ]
-                for j in range(m)
-            ]
-            dist = None
-            for j in range(m):
-                t = F.element_at(
-                    F.array(*[F.lit(x) for x in tbl[j]]),
-                    F.element_at("codes", j + 1) + 1,
-                )
-                dist = t if dist is None else dist + t
-            cond = F.col("centroid_id") == b
-            gated = (
-                F.when(cond, F.round(dist, 6))
-                if gated is None
-                else gated.when(cond, F.round(dist, 6))
-            )
-        per_query.append(
-            F.struct(
-                F.lit(int(qr["id"])).alias("query_id"),
-                gated.otherwise(F.lit(None)).alias("adc_dist"),
-            )
-        )
-
-    exploded = (
-        codes.select(F.col(id_col), "centroid_id", F.explode(F.array(*per_query)).alias("qd"))
-        .select("qd.query_id", id_col, "qd.adc_dist")
-        .filter(F.col("adc_dist").isNotNull())
-        .filter(F.col("query_id") != F.col(id_col))
-    )
-    wsl = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc(id_col))
-    cand = (
-        exploded.withColumn("r", F.row_number().over(wsl))
-        .filter(F.col("r") <= shortlist)
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
+    cand = _ivfpq_cand(
+        codes, centroids, books, queries, nprobe, shortlist, id_col, vec_col,
+        True, tables, broadcast_threshold,
     )
     return _exact_rerank(cand, vectors, queries, k, id_col, vec_col)

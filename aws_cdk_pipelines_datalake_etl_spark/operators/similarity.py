@@ -23,7 +23,13 @@ from pyspark.sql import functions as F
 
 from aws_cdk_pipelines_datalake_etl_spark.functions.rounding import pround
 
-from aws_cdk_pipelines_datalake_etl_spark.functions.vector import as_double_array, cosine
+from aws_cdk_pipelines_datalake_etl_spark.functions.vector import (
+    as_double_array,
+    cosine,
+    max_dot,
+    nearest_centroid,
+    unit_vectors,
+)
 
 
 def _with_double_vec(df: DataFrame, vec_col: str, out: str) -> DataFrame:
@@ -255,29 +261,6 @@ def ivf_topk_from_index(
     )
 
 
-def _lit_vec(values) -> "F.Column":
-    """A literal array<double> column from a Python float sequence."""
-    return F.array(*[F.lit(float(x)) for x in values])
-
-
-def _dot_lit(col_name: str, values) -> "F.Column":
-    """Sequential-fold dot product of an array<double> column against a
-    literal centroid — same fold shape as :func:`..functions.vector.dot`,
-    fully JVM-side (no UDF, no broadcast join needed for k centroids)."""
-    return F.aggregate(
-        F.zip_with(F.col(col_name), _lit_vec(values), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _nearest_lit_centroid(col_name: str, centroids) -> "F.Column":
-    """0-based index of the nearest (max dot) literal centroid; ties
-    break to the lowest index (``array_position`` finds the first max)."""
-    sims = F.array(*[_dot_lit(col_name, c) for c in centroids])
-    return (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-
-
 def train_ivf_codebook(
     vectors: DataFrame,
     n_centroids: int = 8,
@@ -340,16 +323,7 @@ def train_ivf_codebook(
     if sample_fraction is not None:
         base = base.sample(fraction=sample_fraction, seed=seed)
 
-    v_dbl = as_double_array(vec_col)
-    nrm = F.sqrt(F.aggregate(v_dbl, F.lit(0.0), lambda acc, x: acc + x * x))
-    train = (
-        base.select(
-            F.col(id_col).alias("id"),
-            F.transform(v_dbl, lambda x: x / nrm).alias("nv"),
-        )
-        .filter(nrm > 0)
-        .cache()
-    )
+    train = unit_vectors(base, id_col, vec_col).cache()
     try:
         dim_row = train.select(F.size("nv").alias("d")).first()
         if dim_row is None:
@@ -365,11 +339,7 @@ def train_ivf_codebook(
         )
         candidates: list[list[float]] = [list(first["nv"])]
         for r in range(init_rounds):
-            cost = F.greatest(
-                F.lit(0.0),
-                F.lit(1.0)
-                - F.array_max(F.array(*[_dot_lit("nv", c) for c in candidates])),
-            )
+            cost = F.greatest(F.lit(0.0), F.lit(1.0) - max_dot("nv", candidates))
             phi_row = train.select(F.sum(cost).alias("phi")).first()
             phi = float(phi_row["phi"] or 0.0)
             if phi <= 0:
@@ -384,7 +354,7 @@ def train_ivf_codebook(
 
         # weight candidates by Voronoi cell size (one distributed count)
         wrows = (
-            train.select(_nearest_lit_centroid("nv", candidates).alias("c"))
+            train.select(nearest_centroid("nv", candidates).alias("c"))
             .groupBy("c")
             .count()
             .collect()
@@ -417,20 +387,20 @@ def train_ivf_codebook(
         # --- distributed Lloyd refinement -----------------------------------
         for _ in range(max_iter):
             assigned = train.select(
-                _nearest_lit_centroid("nv", centroids).alias("cluster"), "nv"
+                nearest_centroid("nv", centroids).alias("cluster"), "nv"
             )
+            # the dim per-dimension sums as ONE SQL string (py4j: one
+            # expression, not dim Column trees); the same sum aggregates
+            sums = ", ".join(f"sum(nv[{i}])" for i in range(dim))
             agg = (
                 assigned.groupBy("cluster")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    *[F.sum(F.col("nv")[i]).alias(f"s{i}") for i in range(dim)],
-                )
+                .agg(F.count(F.lit(1)).alias("n"), F.expr(f"array({sums})").alias("s"))
                 .collect()
             )
             new_centroids = [list(c) for c in centroids]
             moved = 0.0
             for row in agg:
-                s = np.array([row[f"s{i}"] for i in range(dim)], dtype=np.float64)
+                s = np.array(row["s"], dtype=np.float64)
                 n2 = np.linalg.norm(s)
                 if row["n"] > 0 and n2 > 0:
                     c_new = np.round(s / n2, 9)

@@ -10531,6 +10531,8 @@ QUERIES: list[tuple[QueryFn, str | None]] = [
     (q01_pricing_summary, Q01_ORACLE),
     (q02_taxi_shape_agg, Q02_ORACLE),
     (q23_sql_transform, Q23_PORTABLE_SQL),
+    (sim_pq_full_rerank, SIM_BRUTE_TOPK_ORACLE),
+    (sim_ivfpq_residual_full, SIM_BRUTE_TOPK_ORACLE),
     (corpus_rho1_selection, CORPUS_RHO1_SELECTION_ORACLE),
     (q41_large_orders, Q41_ORACLE),
     (dedup_block_units, DEDUP_BLOCK_UNITS_ORACLE),
@@ -10576,9 +10578,9 @@ QUERIES: list[tuple[QueryFn, str | None]] = [
     (retrieval_metrics_bm25, RETRIEVAL_METRICS_ORACLE),
     (retrieval_rrf_fusion, RETRIEVAL_RRF_FUSION_ORACLE),
     (sample_stratified, _sample_stratified_oracle()),
+    # ---- end of the hash-checked window: the rows above are the first 50 ----
     (sim_brute_topk, SIM_BRUTE_TOPK_ORACLE),
     (sim_lsh_near_dup, SIM_NEAR_DUP_ORACLE),
-    # ---- end of the hash-checked window: the rows above are the first 50 ----
     (sim_random_projection, SIM_RANDOM_PROJECTION_ORACLE),
     (sketch_theta_audience, SKETCH_THETA_ORACLE),
     (source_jsonl_roundtrip, SOURCE_ORC_ORACLE),
@@ -10702,12 +10704,10 @@ QUERIES: list[tuple[QueryFn, str | None]] = [
     (sim_ivf_topk, None),
     (sim_ivf_full_probe, SIM_BRUTE_TOPK_ORACLE),
     (sim_pq_rerank_topk, None),
-    (sim_pq_full_rerank, SIM_BRUTE_TOPK_ORACLE),
     (sim_ivfpq_topk, None),
     (sim_ivfpq_full, SIM_BRUTE_TOPK_ORACLE),
     (sim_ivfpq_index_full_probe, SIM_BRUTE_TOPK_ORACLE),
     (sim_ivfpq_bcast_full, SIM_BRUTE_TOPK_ORACLE),
-    (sim_ivfpq_residual_full, SIM_BRUTE_TOPK_ORACLE),
     (sim_ivf_index_full_probe, SIM_BRUTE_TOPK_ORACLE),
     (sim_ivf_trained, None),
     (sim_ann_recall_trained, None),

@@ -961,3 +961,54 @@ def test_adpcm_truncated_data_raises_in_both_paths():
                 ac.decode_wav(trunc)
     finally:
         ac._VECTORIZE_MIN_BLOCKS = orig
+
+
+def test_builders_leave_arrow_batch_conf_alone(spark):
+    """Building a multimodal operator must not change the session: the
+    Arrow batch size used to be set as a side effect of each builder
+    (and the last one built won for every later Arrow job)."""
+    from aws_cdk_pipelines_datalake_etl_spark.operators.multimodal import (
+        decode_audio_batch,
+        extract_embedding_batch,
+        resize_image_batch,
+        sample_video_frames,
+    )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    one = attach_binary_column(
+        spark.createDataFrame([(1, "abc")], ["doc_id", "payload"]),
+        "payload",
+        "image/png",
+    )
+    for build in (
+        decode_image_batch,
+        lambda d: resize_image_batch(d, 2, 2),
+        decode_audio_batch,
+        sample_video_frames,
+        extract_embedding_batch,
+    ):
+        build(one)
+        assert spark.conf.get(key) == before, build
+
+
+def test_chunk_walk_keeps_rows_aligned_past_first_chunk(spark):
+    """A batch longer than one chunk: every row keeps its own features
+    (the later chunks' positional columns align with their doc ids)."""
+    from aws_cdk_pipelines_datalake_etl_spark.operators.multimodal import (
+        decode_audio_batch,
+    )
+
+    def fake(payload: bytes) -> dict:
+        n = int(bytes(payload))
+        return {"sample_rate": n, "n_channels": 1, "n_frames": n, "duration_ms": n,
+                "rms": float(n), "peak": n, "zero_crossings": n}
+
+    df = spark.createDataFrame(
+        [(i, str(i)) for i in range(150)], ["doc_id", "payload"]
+    ).coalesce(1)
+    wrapped = attach_binary_column(df, "payload", "audio/wav")
+    out = decode_audio_batch(wrapped, decoder=fake).collect()
+    assert len(out) == 150
+    assert all(r.sample_rate == r.doc_id and r.rms == float(r.doc_id) for r in out)
