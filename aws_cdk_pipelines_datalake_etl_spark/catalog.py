@@ -8,12 +8,18 @@ operations are DDL:
 - K2 create-database-if-absent  (etl_raw_to_conformed.py:58-87)
 - K3 idempotent table upsert with type normalization
   (etl_raw_to_conformed.py:90-160; variant excluding partition cols
-  at etl_conformed_to_purposebuilt.py:107)
+  at etl_conformed_to_purposebuilt.py:107): a table that already
+  matches is left in place, any other is replaced by DROP+CREATE
 - K4 partition registration (etl_raw_to_conformed.py:218-219): a
-  table the upsert left in place gets only the run's partition added
-  (``ADD IF NOT EXISTS PARTITION``, one catalog call whatever the
-  history); a newly created table, or a write that may have touched
+  table left in place that got only the run's partition has that one
+  added (``ADD IF NOT EXISTS PARTITION``, one catalog call whatever
+  the history); a replaced table, or a write that may have touched
   any partition, relists them all (``RECOVER PARTITIONS``)
+
+Both zones end in :func:`publish`, which writes first and changes the
+catalog (K3, K4) only after the write has succeeded (the reference
+upserts before it writes, etl_raw_to_conformed.py:187-219 and
+etl_conformed_to_purposebuilt.py:201-212).
 
 Type-normalization rules (SURVEY §1.2):
 1. ``decimal(10,0)`` -> ``int``   (etl_raw_to_conformed.py:103-105)
@@ -24,10 +30,12 @@ Type-normalization rules (SURVEY §1.2):
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from itertools import takewhile
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, DecimalType, IntegerType, NullType, StringType
 
 PARTITION_COLS = ("year", "month", "day")
@@ -42,24 +50,19 @@ def normalize_type(dt: DataType) -> DataType:
     return dt
 
 
-def create_database_if_absent(
-    spark: SparkSession, database: str, location: str | None = None
-) -> None:
+def create_database_if_absent(spark: SparkSession, database: str) -> None:
     """K2: get-else-create database (etl_raw_to_conformed.py:58-87)."""
-    loc = f" LOCATION '{location}'" if location else ""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{database}`{loc}")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{database}`")
 
 
-def _columns(df: DataFrame, include_partition_cols: bool) -> list[tuple[str, str]]:
+def _columns(df: DataFrame) -> list[tuple[str, str]]:
     cols = [
         (f.name, normalize_type(f.dataType).simpleString())
         for f in df.schema.fields
         if f.name.lower() not in PARTITION_COLS
     ]
-    if include_partition_cols:
-        # partition keys are always string (etl_raw_to_conformed.py:129-133)
-        cols.extend((c, "string") for c in PARTITION_COLS)
-    return cols
+    # partition keys are always string (etl_raw_to_conformed.py:129-133)
+    return cols + [(c, "string") for c in PARTITION_COLS]
 
 
 def local_path(location: str) -> str:
@@ -73,13 +76,12 @@ def _table_matches(
     spark: SparkSession,
     fqn: str,
     cols: list[tuple[str, str]],
-    partition_cols: tuple[str, ...],
     location: str,
     properties: dict[str, str],
 ) -> bool:
     """True when table ``fqn`` exists with exactly these columns and
-    types, partition columns and location, and carries ``properties``
-    among its table properties.
+    types, partitioned by :data:`PARTITION_COLS`, at ``location``, and
+    carries ``properties`` among its table properties.
 
     One ``DESCRIBE TABLE EXTENDED`` answers all of it without a Spark
     job (``Catalog.listColumns`` runs several).  Its rows: every
@@ -101,70 +103,41 @@ def _table_matches(
     props = set(info.get("Table Properties", "[]")[1:-1].split(", "))
     return (
         have == cols
-        and parts == partition_cols
+        and parts == PARTITION_COLS
         and local_path(info.get("Location", "")) == local_path(location)
         and {f"{k}={v}" for k, v in properties.items()} <= props
     )
 
 
 def upsert_table(
-    spark: SparkSession,
-    df: DataFrame,
-    database: str,
-    table: str,
-    location: str,
-    partitioned: bool = True,
-    properties: dict[str, str] | None = None,
-) -> bool:
-    """K3: create-or-replace the external table definition.
+    spark: SparkSession, df: DataFrame, database: str, table: str, location: str
+) -> None:
+    """K3: create-or-replace the external table definition of ``df``'s
+    columns, partitioned by :data:`PARTITION_COLS`, at ``location``.
 
     The reference overwrites the catalog entry every run
     (TableVersion '0', create-or-update at
     etl_raw_to_conformed.py:147-154) — last-writer-wins schema, no
     evolution.  DROP+CREATE of an EXTERNAL (location-backed) table
-    reproduces that exactly without touching data files.  When the
-    table already has the same columns, types, partition columns and
-    location, both statements, and the database's
-    create-if-absent, are skipped: the entry would come out identical,
-    and the table never goes missing between them.
-
-    ``properties`` must also be among the table's properties for it to
-    be left in place.  The CREATE does not write them: the caller sets
-    them with :func:`set_table_properties` once the data they vouch
-    for is written, so a run that fails in between leaves a table that
-    does not match.
-
-    Returns True when the table was left in place, False when it was
-    created.  Callers run :func:`recover_partitions` after every write;
-    a created table starts with no partitions registered.
+    reproduces that exactly without touching data files.  The new
+    table has no partitions registered and no table properties;
+    :func:`publish` runs this only once the data is written, and only
+    when the existing entry does not match it.
     """
-    cols = _columns(df, include_partition_cols=partitioned)
-    partition_cols = PARTITION_COLS if partitioned else ()
-    fqn = f"`{database}`.`{table}`"
-    if _table_matches(spark, fqn, cols, partition_cols, location, properties or {}):
-        return True
     create_database_if_absent(spark, database)
+    fqn = f"`{database}`.`{table}`"
     spark.sql(f"DROP TABLE IF EXISTS {fqn}")
-    # a location that does not exist yet makes the CREATE log a
-    # FileNotFoundException stack trace; an empty directory reads as
-    # an empty table
-    path = spark._jvm.org.apache.hadoop.fs.Path(location)
-    path.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(path)
-    ddl = ", ".join(f"`{name}` {dtype}" for name, dtype in cols)
-    partition_clause = (
-        f" PARTITIONED BY ({', '.join(partition_cols)})" if partitioned else ""
-    )
+    ddl = ", ".join(f"`{name}` {dtype}" for name, dtype in _columns(df))
     spark.sql(
         f"CREATE TABLE {fqn} ({ddl}) USING PARQUET"
-        f"{partition_clause} LOCATION '{location}'"
+        f" PARTITIONED BY ({', '.join(PARTITION_COLS)}) LOCATION '{location}'"
     )
-    return False
 
 
 def set_table_properties(
     spark: SparkSession, database: str, table: str, properties: dict[str, str]
 ) -> None:
-    """Add or overwrite table properties (see :func:`upsert_table`)."""
+    """Add or overwrite table properties (see :func:`publish`)."""
     pairs = ", ".join(f"'{k}' = '{v}'" for k, v in properties.items())
     spark.sql(f"ALTER TABLE `{database}`.`{table}` SET TBLPROPERTIES ({pairs})")
 
@@ -189,3 +162,73 @@ def recover_partitions(
         return
     spec = ", ".join(f"{c}='{v}'" for c, v in zip(PARTITION_COLS, partition))
     spark.sql(f"ALTER TABLE {fqn} ADD IF NOT EXISTS PARTITION ({spec})")
+
+
+class Published(NamedTuple):
+    table: DataFrame  # the catalog table
+    n_rows: int  # rows written this run, observed during the write itself
+
+
+def publish(
+    spark: SparkSession,
+    df: DataFrame,
+    database: str,
+    table: str,
+    location: str,
+    partition: Sequence[str],
+    run_partition: Callable[[DataFrame], DataFrame | None],
+    properties: dict[str, str] | None = None,
+) -> Published:
+    """K1-K4 for one run: write ``df`` to ``location`` as parquet
+    partitioned by :data:`PARTITION_COLS` with dynamic overwrite, then
+    bring table ``database.table`` up to date with it.
+
+    1. Match: the table is kept when it already has ``df``'s columns
+       and types, the partition columns and ``location``, and carries
+       ``properties`` among its table properties (one ``DESCRIBE``).
+    2. Write: on a kept table, ``run_partition(df)`` — ``df``'s rows in
+       the run's ``partition`` (year, month and day values), or None
+       when only the whole of ``df`` is known to be right — is written
+       instead of ``df``.
+    3. Catalog: a table that did not match is replaced
+       (:func:`upsert_table`), then partitions are registered: only
+       ``partition`` on a kept table that got only that one, all of
+       them otherwise (:func:`recover_partitions`).  A replaced table
+       gets ``properties`` last, so they vouch only for data fully
+       written.
+
+    The catalog changes only after the write has succeeded.  A write
+    that fails, or one still running, leaves the previous definition
+    and its partitions readable: with the replacement first, a failed
+    rebuild of a purpose-built table read 0 rows with 0 partitions
+    registered while its old files were still on disk.  The
+    reference's order (upsert, then write) reaches the same state when
+    the write succeeds.  On a table that did not match, the DROP and
+    CREATE pair still leaves a moment with no table.
+
+    ``n_rows`` comes from an ``Observation`` attached to the write
+    plan, not a re-read of the written table: the write materializes
+    every column, so DROPMALFORMED's column-dependent row filtering is
+    fully resolved in that same action (counting any *narrower* plan
+    would be wrong — malformed detection depends on which columns get
+    parsed), and the count costs no second scan.
+    """
+    fqn = f"`{database}`.`{table}`"
+    properties = properties or {}
+    kept = _table_matches(spark, fqn, _columns(df), location, properties)
+    one = run_partition(df) if kept else None
+    obs = Observation()
+    (
+        (df if one is None else one)
+        .observe(obs, F.count(F.lit(1)).alias("n_rows"))
+        .write.partitionBy(*PARTITION_COLS)
+        .format("parquet")
+        .mode("overwrite")  # dynamic overwrite: only touched partitions replaced
+        .save(location)
+    )
+    if not kept:
+        upsert_table(spark, df, database, table, location)
+    recover_partitions(spark, database, table, None if one is None else partition)
+    if not kept and properties:
+        set_table_properties(spark, database, table, properties)
+    return Published(spark.table(fqn), int(obs.get["n_rows"]))

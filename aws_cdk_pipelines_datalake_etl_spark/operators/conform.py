@@ -21,9 +21,7 @@ bounded by cluster cores, no small-file explosion.
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import NullType, StructType
 
@@ -51,9 +49,7 @@ def repair_null_columns(df: DataFrame) -> DataFrame:
     return df.withColumns({c: F.col(c).cast("string") for c in null_cols})
 
 
-def read_raw(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
+def read_raw(spark: SparkSession, path: str) -> DataFrame:
     """Pick the raw reader by file extension (reference is CSV-only,
     etl_raw_to_conformed.py:180-185; JSON/parquet are the §2.6 source
     extensions)."""
@@ -63,7 +59,7 @@ def read_raw(
             read_raw_json,
         )
 
-        return read_raw_json(spark, path, schema=schema)
+        return read_raw_json(spark, path)
     if lower.endswith(".parquet"):
         return spark.read.parquet(path)
     if lower.endswith(".orc"):
@@ -75,12 +71,7 @@ def read_raw(
             F.col("value").alias("text"),
             F.col("_metadata.file_name").alias("source_file"),
         )
-    return read_raw_csv(spark, path, schema=schema)
-
-
-class ConformResult(NamedTuple):
-    table: DataFrame  # the conformed catalog table
-    n_rows: int  # rows written, observed during the write itself
+    return read_raw_csv(spark, path)
 
 
 #: integer widening chain for schema_policy="merge"
@@ -171,10 +162,9 @@ def conform(
     spark: SparkSession,
     params: JobParams,
     conformed_root: str,
-    schema: StructType | None = None,
     sample_rows: int = 0,
     schema_policy: str = "last_writer",
-) -> ConformResult:
+) -> catalog.Published:
     """Run the conformance job for one raw file
     (parity: etl_raw_to_conformed.py:176-221 ``main``).
 
@@ -188,17 +178,13 @@ def conform(
     columns union in, dropped columns persist as typed nulls, and a
     narrowing file is cast back up instead of poisoning history.
 
-    The row count comes from an ``Observation`` attached to the write
-    plan, not a re-read of the written table: the write materializes
-    every column, so DROPMALFORMED's column-dependent row filtering is
-    fully resolved in that same action (counting any *narrower* plan
-    would be wrong — malformed detection depends on which columns get
-    parsed), and the count costs nothing extra.  At 100 TB that's one
-    full table scan saved per ingested file.
+    Every row carries the run's partition literals, so on a table that
+    :func:`catalog.publish` keeps the whole frame is the run's
+    partition.
     """
     if schema_policy not in ("last_writer", "merge"):
         raise ValueError(f"unknown schema_policy {schema_policy!r}")
-    df = read_raw(spark, params.source_path, schema=schema)
+    df = read_raw(spark, params.source_path)
     if sample_rows:  # K8 tap 1: post-read (etl_raw_to_conformed.py:196)
         df.show(sample_rows)
     df = stamp_partitions(df, *params.partition_values)
@@ -211,41 +197,15 @@ def conform(
             df = reconcile_schema(df, spark.table(fqn).schema)
     if sample_rows:  # K8 tap 3: pre-write (etl_raw_to_conformed.py:215)
         df.show(sample_rows)
-
-    obs = Observation(f"conform_{params.execution_id or params.table_name}")
-    df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-
-    location = f"{conformed_root.rstrip('/')}/{params.table_name}"
-    (
-        df.write.partitionBy("year", "month", "day")
-        .format("parquet")
-        .mode("overwrite")  # dynamic overwrite: only touched partitions replaced
-        .save(location)
-    )
-    n_rows = int(obs.get["n_rows"])
-    # catalog upsert after the write: a failed write leaves the catalog
-    # untouched, whereas an upsert before it would already have run
-    # DROP+CREATE on a drifted schema (same net state as the
-    # reference's upsert-then-write order when the write succeeds)
-    kept = catalog.upsert_table(
+    return catalog.publish(
         spark,
         df,
-        database=params.target_database_name,
-        table=params.table_name,
-        location=location,
-    )
-    # the write touched only this run's partition: a table left in
-    # place needs only that one registered
-    catalog.recover_partitions(
-        spark,
         params.target_database_name,
         params.table_name,
-        params.partition_values if kept else None,
+        f"{conformed_root.rstrip('/')}/{params.table_name}",
+        params.partition_values,
+        lambda df: df,
     )
-    table = spark.table(
-        f"`{params.target_database_name}`.`{params.table_name}`"
-    )
-    return ConformResult(table, n_rows)
 
 
 def split_quarantine(

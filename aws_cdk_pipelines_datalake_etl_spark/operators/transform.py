@@ -2,10 +2,11 @@
 
 Reimplements ``lib/glue_scripts/etl_conformed_to_purposebuilt.py``:
 look up ``transforms/<table>.sql`` (S3), execute it with ``spark.sql``
-against catalog tables (S2), upsert the output table definition
-(partition cols excluded from the regular column list,
-etl_conformed_to_purposebuilt.py:107), write partitioned Parquet with
-dynamic overwrite, recover partitions.
+against catalog tables (S2), and publish the result like the conformed
+zone (:func:`catalog.publish`): partitioned Parquet with dynamic
+overwrite, then the output table definition (partition cols excluded
+from the regular column list, etl_conformed_to_purposebuilt.py:107)
+and its partitions.
 
 This is the engine's real query entry point: SQL string -> Catalyst
 parse/analyze/optimize -> physical plan.  The engine writes zero
@@ -57,10 +58,8 @@ import hashlib
 import re
 from collections.abc import Sequence
 from pathlib import Path
-from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from aws_cdk_pipelines_datalake_etl_spark import catalog
 from aws_cdk_pipelines_datalake_etl_spark.params import JobParams
@@ -87,11 +86,6 @@ def run_sql(spark: SparkSession, sql_text: str) -> DataFrame:
 #: table property holding the SHA-256 of the SQL text the
 #: purpose-built data was computed with
 SQL_HASH_PROPERTY = "transform.sql_sha256"
-
-
-class TransformResult(NamedTuple):
-    table: DataFrame  # the purpose-built catalog table
-    n_rows: int  # rows written this run, observed during the write itself
 
 
 def _strings(seq) -> list[str]:
@@ -182,53 +176,31 @@ def transform(
     conformed_root: str,
     purposebuilt_root: str,
     transforms_dir: str | Path | None = None,
-) -> TransformResult:
+) -> catalog.Published:
     """Run the purpose-built job for one conformed table
     (parity: etl_conformed_to_purposebuilt.py:180-212 ``main``) into
     the ``<source_system>_purposebuilt`` database.
 
-    The table upsert runs before the write, the reference's own order;
-    whether it left the table in place decides, with the plan check,
-    between writing only this run's partition and recomputing all of
-    them (module docstring).  ``n_rows`` counts the rows written this
-    run: the run's partition only, on the incremental path.  The
-    count is observed during the write (same rationale as
-    operators/conform.py: no second scan of the written table)."""
+    :func:`catalog.publish` writes before it touches the catalog, the
+    reverse of the reference's order: a full rebuild that fails, or is
+    still running, leaves the previous table and its partitions
+    readable, where an upsert first had already dropped them (a failed
+    rebuild read 0 rows).  Whether the table matches this SQL decides,
+    with the plan check, between writing only this run's partition and
+    recomputing all of them (module docstring).  ``n_rows`` counts the
+    rows written this run: the run's partition only, on the
+    incremental path."""
     sql_text = load_transform_sql(params.table_name, transforms_dir)
-    df = run_sql(spark, sql_text)
-
-    database = f"{params.source_system_name}_purposebuilt"
-    location = f"{purposebuilt_root.rstrip('/')}/{params.table_name}"
-    sql_hash = {SQL_HASH_PROPERTY: hashlib.sha256(sql_text.encode()).hexdigest()}
-    kept = catalog.upsert_table(
-        spark,
-        df,
-        database=database,
-        table=params.table_name,
-        location=location,
-        properties=sql_hash,
-    )
-    partition = params.partition_values
     conformed = f"{conformed_root.rstrip('/')}/{params.table_name}"
-    one = _partition_slice(df, conformed, partition) if kept else None
-    if one is not None:
-        df = one
-
-    obs = Observation(f"transform_{params.execution_id or params.table_name}")
-    df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    (
-        df.write.partitionBy("year", "month", "day")
-        .format("parquet")
-        .mode("overwrite")
-        .save(location)
-    )
-    n_rows = int(obs.get["n_rows"])
-    catalog.recover_partitions(
-        spark, database, params.table_name, None if one is None else partition
-    )
-    if not kept:
-        # the data now matches this SQL: later runs may go incremental
-        catalog.set_table_properties(spark, database, params.table_name, sql_hash)
-    return TransformResult(
-        spark.table(f"`{database}`.`{params.table_name}`"), n_rows
+    return catalog.publish(
+        spark,
+        run_sql(spark, sql_text),
+        f"{params.source_system_name}_purposebuilt",
+        params.table_name,
+        f"{purposebuilt_root.rstrip('/')}/{params.table_name}",
+        params.partition_values,
+        lambda df: _partition_slice(df, conformed, params.partition_values),
+        # set once a full write with this SQL has finished: later runs
+        # may go incremental
+        properties={SQL_HASH_PROPERTY: hashlib.sha256(sql_text.encode()).hexdigest()},
     )

@@ -770,6 +770,63 @@ def test_incremental_transform_equals_full_recompute(spark, runner, lake_root):
     assert (2, 99.0) in {(r.vendorid, r.total_fare_amount) for r in day1}
 
 
+def test_catalog_statements_per_file(spark, runner, lake_root, monkeypatch):
+    """The catalog statements each zone issues per file.  A first file
+    creates both tables and registers every partition.  A later file,
+    new day or the same day again, checks each table with one DESCRIBE
+    and adds its own partition, which also refreshes the table's
+    cached listing.  A window SQL, which cannot write one day alone,
+    relists every partition but keeps its table."""
+    from pyspark.sql import SparkSession
+
+    from tests.conftest import YELLOW_HEADER, YELLOW_ROWS
+
+    # earlier tests in this session registered the same tables elsewhere
+    for db in ("tlc_taxi_data", "app_events"):
+        for zone in (db, f"{db}_purposebuilt"):
+            spark.sql(f"DROP DATABASE IF EXISTS {zone} CASCADE")
+    issued = []
+    sql = SparkSession.sql
+
+    def record(self, query, *args, **kwargs):
+        issued.append(query)
+        return sql(self, query, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", record)
+
+    def statements(key: str, day: int) -> dict:
+        """{database: [statement kind, ...]} of one successful run."""
+        issued.clear()
+        assert runner.on_file(key, as_of=_day(day)).status == "SUCCEEDED"
+        zones: dict = {}
+        for q in issued:
+            w = q.split()
+            if w[0] not in ("DESCRIBE", "CREATE", "DROP", "ALTER"):
+                continue  # the transform SQL
+            kind = w[3] if w[0] == "ALTER" else " ".join(w[:2])
+            zones.setdefault(q.split("`")[1], []).append(kind)
+        return zones
+
+    def cold(db: str) -> dict:
+        create = ["CREATE DATABASE", "DROP TABLE", "CREATE TABLE", "RECOVER"]
+        return {db: create, f"{db}_purposebuilt": [*create, "SET"]}
+
+    def warm(db: str, purposebuilt: str) -> dict:
+        check = "DESCRIBE TABLE"
+        return {db: [check, "ADD"], f"{db}_purposebuilt": [check, purposebuilt]}
+
+    yellow = _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, YELLOW_ROWS)
+    assert statements(yellow, 1) == cold("tlc_taxi_data")
+    assert statements(yellow, 2) == warm("tlc_taxi_data", "ADD")
+    assert statements(yellow, 2) == warm("tlc_taxi_data", "ADD")  # re-ingest
+
+    events, header = "app_events/user_events/events.csv", "event_id,user_id,amount"
+    _drop(lake_root, events, header, ["1,7,10.0", "2,7,5.0"])
+    assert statements(events, 1) == cold("app_events")
+    _drop(lake_root, events, header, ["3,7,1.0"])
+    assert statements(events, 2) == warm("app_events", "RECOVER")
+
+
 def test_incremental_plan_scans_only_the_run_partition(
     spark, runner, yellow_csv, lake_root
 ):
@@ -891,7 +948,8 @@ def test_green_cross_table_transform_recomputes_all_days(spark, runner, lake_roo
 def test_edited_transform_sql_rebuilds_history(spark, lake_root, tmp_path):
     """Editing the .sql file (same output schema) changes the table's
     SQL hash, so the next run recomputes every day with the new SQL;
-    a rebuild that fails leaves the next run rebuilding too."""
+    a rebuild that fails leaves the table as readers saw it before the
+    edit, and the next run rebuilding too."""
     from tests.conftest import YELLOW_HEADER, YELLOW_ROWS
 
     transforms = tmp_path / "transforms"
@@ -908,6 +966,12 @@ def test_edited_transform_sql_rebuilds_history(spark, lake_root, tmp_path):
     key = _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, YELLOW_ROWS)
     assert [r.on_file(key, as_of=_day(d)).purposebuilt_rows for d in (1, 2)] == [3, 3]
 
+    def day_counts() -> list:
+        rows = spark.table(YELLOW_PB).collect()
+        return sorted((row.day, row["count"]) for row in rows)
+
+    pre_edit = day_counts()
+    assert {d for d, _ in pre_edit} == {"01", "02"}
     source = "FROM tlc_taxi_data.yellow_taxi_trip_record"
     edited = sql.replace(
         "COUNT(*)                   AS count", "COUNT(*) + 100 AS count"
@@ -917,6 +981,8 @@ def test_edited_transform_sql_rebuilds_history(spark, lake_root, tmp_path):
     far = YELLOW_ROWS[0].replace(",10.0,", ",5000.0,")
     _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, [far, *YELLOW_ROWS[1:]])
     assert r.on_file(key, as_of=_day(3)).status == "FAILED"
+    # readers still see the table as it was before the edit
+    assert day_counts() == pre_edit
 
     _drop(lake_root, YELLOW_KEY, YELLOW_HEADER, YELLOW_ROWS)
     res = r.on_file(key, as_of=_day(3))
